@@ -193,21 +193,15 @@ def pagerank(
     then stays ~SCALE (up to floor truncation) like textbook PageRank.
     Off by default so existing oracle rows stay bit-identical.
 
-    Every ``ckpt_every``-th iteration's score table is checkpointed
-    (local+lazy by default, durable when ``checkpoint_dir`` is given —
-    same contract as connected_components): without the periodic lineage
+    Every ``ckpt_every``-th iteration's score table is checkpointed, as
+    are the input edges and the degree-joined edge table (local+lazy by
+    default, durable when ``checkpoint_dir`` is given — same contract as
+    connected_components): without the periodic lineage
     cut, iteration t's plan contains t copies of the join chain and
     Catalyst optimization time grows faster than the data does; cutting
     EVERY iteration wastes a materialization job each on short runs.
     """
     d_num = int(round(damping * 100))  # damping as an exact rational /100
-
-    # the bfs_hops rule (round 11): ``edges`` is consumed TWICE below —
-    # the out-degree groupBy and the join's left side — and when it
-    # arrives as an unmaterialized pipeline (the kNN edge build) both
-    # copies of that build land in the one materialization job; the lazy
-    # pin makes the second consumer read the first's cached partitions.
-    edges = edges.localCheckpoint(eager=False)
 
     def ckpt(df: DataFrame) -> DataFrame:
         if checkpoint_dir is None:
@@ -217,6 +211,13 @@ def pagerank(
             return df.localCheckpoint(eager=False)
         df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
         return df.checkpoint()
+
+    # the bfs_hops rule: ``edges`` is consumed TWICE below — the
+    # out-degree groupBy and the join's left side — and when it arrives as
+    # an unmaterialized pipeline (the kNN edge build) both copies of that
+    # build land in the one materialization job; the pin makes the second
+    # consumer read the first's materialized partitions.
+    edges = ckpt(edges)
 
     n_df = F.broadcast(nodes.agg(F.count("*").cast("long").alias("_n")))
     outdeg = edges.groupBy("src").agg(F.count("*").cast("long").alias("_deg"))

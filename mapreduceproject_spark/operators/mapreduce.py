@@ -25,9 +25,14 @@ Intentional upgrades over the reference (documented divergences, §7.4.3-4):
 - shuffle is Spark's distributed exchange, not a single-master append
   (src/master.go:518-614), so retries are exactly-once, not at-least-once.
 
-Scale: the function path never collects; the exe path streams one temp
-file per *partition* (not per input line), so executable overhead is
-O(partitions).  Skewed keys in the full-group path are the same hazard the
+Scale: the function path never collects, and the word-count mapper runs
+as Catalyst (``explode(tokens(value))``) with no Python worker at all.
+The other Python paths cross as Arrow batches (``mapInPandas`` /
+``applyInPandas``), never pickled rows; the exe path gathers a partition's
+batches into one temp file, so executable overhead is O(partitions).  On
+``local*`` masters the workers start from ``_pyworker``, which keeps
+Python < 3.12 from re-reading every zip directory before each task (see
+``session``).  Skewed keys in the full-group path are the same hazard the
 reference had; ``juice_algebraic`` is the scalable alternative and AQE
 skew-join handles the join-side cases.
 """
@@ -43,6 +48,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
+
+from mapreduceproject_spark.functions.textfn import WS_CHARS, tokens
 
 KV_SCHEMA = StructType(
     [StructField("key", StringType()), StructField("value", StringType())]
@@ -76,9 +83,15 @@ def maple(lines: DataFrame, fn: MapFn, num_tasks: int | None = None) -> DataFram
     flatMap over the line column; the shuffle to key-groups happens at the
     consuming juice (stage boundary), exactly where the reference ships
     key-files to the master (src/node.go:946-991) — minus the master.
+    :func:`wordcount_mapper` itself compiles to its Catalyst twin
+    (``explode(tokens(value))``, value ``"1"``) and starts no Python worker.
     """
     if num_tasks:
         lines = lines.repartition(num_tasks)
+    if fn is wordcount_mapper:
+        return lines.select(
+            F.explode(tokens(F.col("value"))).alias("key"), F.lit("1").alias("value")
+        )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -98,14 +111,15 @@ def maple_exe(lines: DataFrame, exe: str, num_tasks: int | None = None) -> DataF
 
     The reference invokes the mapper once per input *file* with the
     filename as argv (src/node.go:916).  ``rdd.pipe`` is line-on-stdin, so
-    instead each Spark partition writes its lines to a temp file and execs
-    ``exe <tmpfile>`` once — same contract, O(partitions) process spawns.
+    instead each Spark partition gathers its Arrow batches into one temp
+    file and execs ``exe <tmpfile>`` once — same contract, O(partitions)
+    process spawns.
     """
     if num_tasks:
         lines = lines.repartition(num_tasks)
 
-    def run_partition(rows: Iterator) -> Iterator[tuple[str, str]]:
-        buf = [r["value"] for r in rows]
+    def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        buf = [v for pdf in batches for v in pdf["value"]]
         if not buf:
             return
         with tempfile.NamedTemporaryFile("w", suffix=".txt", delete=False) as f:
@@ -117,12 +131,10 @@ def maple_exe(lines: DataFrame, exe: str, num_tasks: int | None = None) -> DataF
             ).stdout
         finally:
             os.unlink(tmp)
-        for line in out.splitlines():
-            kv = _parse_kv_line(line)
-            if kv is not None:
-                yield kv
+        kvs = [kv for kv in map(_parse_kv_line, out.splitlines()) if kv is not None]
+        yield pd.DataFrame(kvs, columns=["key", "value"])
 
-    return lines.select("value").rdd.mapPartitions(run_partition).toDF(KV_SCHEMA)
+    return lines.select("value").mapInPandas(run_partition, KV_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -217,21 +229,30 @@ def read_kv_lines(spark: SparkSession, paths: list[str] | str) -> DataFrame:
 def delete_intermediate_files(src: list[str] | str) -> list[str]:
     """Delete maple-intermediate files matching ``src`` (a path, glob, or
     directory — directories delete their directly-contained files, the
-    prefix-as-directory convention).  Returns the deleted paths."""
+    prefix-as-directory convention), each with the hidden ``.<name>.crc``
+    checksum sidecar Hadoop writes beside it.  Returns the deleted data
+    paths."""
     import glob as _glob
 
-    patterns = [src] if isinstance(src, str) else list(src)
     deleted: list[str] = []
+
+    def unlink(path: str) -> None:
+        os.unlink(path)
+        deleted.append(path)
+        head, name = os.path.split(path)
+        crc = os.path.join(head, f".{name}.crc")
+        if os.path.isfile(crc):
+            os.unlink(crc)
+
+    patterns = [src] if isinstance(src, str) else list(src)
     for pat in patterns:
         for path in sorted(_glob.glob(pat)):
             if os.path.isdir(path):
                 for inner in sorted(_glob.glob(os.path.join(path, "*"))):
                     if os.path.isfile(inner):
-                        os.unlink(inner)
-                        deleted.append(inner)
+                        unlink(inner)
             elif os.path.isfile(path):
-                os.unlink(path)
-                deleted.append(path)
+                unlink(path)
     return deleted
 
 
@@ -283,8 +304,6 @@ def wordcount_mapper(line: str):
     point (this module, the CLI verbs, the registered query) must route
     through this function so the tokenization can never fork."""
     import re
-
-    from mapreduceproject_spark.functions.textfn import WS_CHARS
 
     ws = re.compile(f"[{WS_CHARS}]+")
     return ((w, "1") for w in ws.split(line) if w)

@@ -12,11 +12,20 @@ Scale posture (100 TB mindset, tested on local[32]):
 - Arrow enabled for every pandas-UDF boundary.
 - UTC session timezone so results are reproducible across engines
   (the DuckDB oracle runs timezone-naive).
+- ``local*`` masters (``local-cluster`` too) start their Python workers
+  from :mod:`mapreduceproject_spark._pyworker`, which on Python < 3.12
+  stops pyspark's per-task ``importlib.invalidate_caches()`` from
+  re-reading every zip directory on the worker's path — the fixed cost
+  that dominated small maple/juice tasks.  The package's parent directory
+  goes on the executors' ``PYTHONPATH`` so the daemon module is found
+  before any ``addPyFile``.  Other masters keep ``pyspark.daemon``: there
+  the module would have to be shipped at submit time.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -60,6 +69,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.python.daemon.module", "mapreduceproject_spark._pyworker"
+        ).config("spark.executorEnv.PYTHONPATH", str(Path(__file__).resolve().parent.parent))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

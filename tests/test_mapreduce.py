@@ -140,6 +140,7 @@ def test_juice_job_delete_input_flag(spark, corpus, tmp_path):
     dest1 = str(tmp_path / "out1")
     mr.run_juice_job(spark, prefix1, dest1, delete_input=True)
     assert not glob.glob(f"{prefix1}/part-*"), "flag must delete intermediates"
+    assert not glob.glob(f"{prefix1}/.part-*.crc"), "checksum sidecars go too"
     got1 = {
         tuple(r["value"].split(None, 1))
         for r in spark.read.text(dest1).collect()
@@ -207,3 +208,73 @@ def test_read_kv_lines_key_only_line(spark, tmp_path):
         for r in mr.read_kv_lines(spark, str(p)).collect()
     }
     assert got == {("alpha", "1"), ("bare", ""), ("beta", "2 3")}
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _write_exe(path, body: str) -> str:
+    path.write_text("#!/bin/sh\n" + body)
+    path.chmod(path.stat().st_mode | stat.S_IEXEC)
+    return str(path)
+
+
+WS_LINES = [
+    "foo\x0bbar baz",        # VT: whitespace for the twin
+    "foo\xa0bar",            # NBSP: not whitespace
+    "a\rb\tc",
+    "",
+    "   lead and trail   ",
+    "\t\t",
+    "x x x",
+]
+
+
+def test_wordcount_maple_twin_matches_python_route(spark):
+    """maple(wordcount_mapper) runs as Catalyst; a wrapping lambda forces
+    the mapInPandas route through the same Python mapper — the (key,
+    value) multisets must agree on every whitespace edge case."""
+    lines = spark.createDataFrame([(l,) for l in WS_LINES], ["value"])
+    catalyst = mr.maple(lines, mr.wordcount_mapper)
+    python = mr.maple(lines, lambda l: mr.wordcount_mapper(l))
+    got = Counter(map(tuple, catalyst.collect()))
+    assert got == Counter(map(tuple, python.collect()))
+    assert got[("foo\xa0bar", "1")] == 1 and got[("x", "1")] == 3
+    assert got[("foo", "1")] == 1 and got[("b", "1")] == 1
+
+
+def test_maple_plans_no_python_for_wordcount_and_arrow_for_exe(spark, tmp_path):
+    (tmp_path / "in.txt").write_text("a b\n")
+    lines = mr.read_lines(spark, str(tmp_path / "in.txt"))
+    wc = _executed_plan(mr.maple(lines, mr.wordcount_mapper))
+    assert "Python" not in wc and "MapInPandas" not in wc, wc
+    exe = _write_exe(tmp_path / "cat.sh", 'cat "$1"\n')
+    plan = _executed_plan(mr.maple_exe(lines, exe))
+    assert "MapInPandas" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_maple_exe_protocol(spark, tmp_path):
+    """``key value`` stdout: the value keeps internal whitespace, a last
+    line with no newline still counts, empty partitions never exec, and
+    a non-zero exit fails the job."""
+    calls = tmp_path / "calls"
+    calls.mkdir()
+    exe = _write_exe(
+        tmp_path / "echo.sh", f'touch {calls}/$$\nprintf \'%s\' "$(cat "$1")"\n'
+    )
+    rows = ["k1 v  with   spaces", "k2 last", "k3"]
+    lines = spark.createDataFrame([(r,) for r in rows], ["value"])
+    got = sorted(map(tuple, mr.maple_exe(lines, exe, num_tasks=8).collect()))
+    assert got == [("k1", "v  with   spaces"), ("k2", "last"), ("k3", "")]
+    assert 1 <= len(list(calls.iterdir())) <= len(rows)
+
+    for p in calls.iterdir():
+        p.unlink()
+    empty = spark.createDataFrame([], "value string").repartition(4)
+    assert mr.maple_exe(empty, exe).collect() == []
+    assert not list(calls.iterdir()), "an empty partition must not exec"
+
+    failing = _write_exe(tmp_path / "fail.sh", "exit 3\n")
+    with pytest.raises(Exception, match="non-zero exit status 3"):
+        mr.maple_exe(lines, failing).collect()

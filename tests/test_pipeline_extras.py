@@ -936,3 +936,24 @@ def test_label_propagation_isolated_keeps_own_label(spark):
     }
     assert got[7] == 7  # no neighbors -> keeps itself
     assert got[0] == got[1] == 0  # symmetrized pair converges to min id
+
+
+def test_pagerank_checkpoint_dir_is_durable(spark, tmp_path):
+    """With ``checkpoint_dir`` set every pin is a reliable checkpoint: the
+    input edges and the degree-joined edge table each write an RDD
+    directory there (two iterations, ``ckpt_every=3``: no score-table
+    cut), and the scores match the local-checkpoint run."""
+    from mapreduceproject_spark.operators.graph import pagerank
+
+    nodes = spark.createDataFrame([(i,) for i in ["a", "b", "c"]], ["id"])
+    edges = spark.createDataFrame(
+        [("a", "c"), ("b", "c"), ("c", "a")], ["src", "dst"]
+    )
+    local = {r["id"]: r["pr"] for r in pagerank(nodes, edges, "id").collect()}
+    durable = {
+        r["id"]: r["pr"]
+        for r in pagerank(nodes, edges, "id", checkpoint_dir=str(tmp_path)).collect()
+    }
+    assert durable == local
+    assert len(list(tmp_path.glob("*/rdd-*"))) == 2
+    assert any(p.is_file() for p in tmp_path.rglob("part-*"))
