@@ -246,6 +246,14 @@ def langid_ngram(
     profile, argmax hits (ties → lang asc).  Two aggs + one broadcastable
     profile join — the Cavnar–Trenkle n-gram profile method in DataFrame
     form.
+
+    Contract: ``id_col`` is unique in ``df`` (one row, so one label, per
+    document).  The per-doc gram counts are grouped by (id, label, gram)
+    and scored as (id, gram) rows without a distinct.  A repeated id
+    would weigh its text twice in its language's profile and repeat its
+    output row; an id with two labels would also count each of its grams
+    twice in its profile hits.  ``text_langid_ngram`` passes the
+    ``documents`` table, whose key is ``doc_id``.
     """
     from mapreduceproject_spark.sources.catalog import spread_for_compute
 

@@ -136,6 +136,12 @@ ORACLES: dict[str, str] = {}
 #   names the round-10 ledger promised plus the first three r7 rows
 #   (batch_sessionize, embedding_dim_stats, dedup_source_report).  After
 #   this round the oldest remaining evidence is r7.
+# Next window: the four entries ahead of the round-11 block changed after
+#   the round-11 window and have only the in-repo parity run as evidence
+#   (bm25_search, market_basket_lift and nb_quality_score were rewritten
+#   in round 11; maple_juice_word_count's mapper now compiles to Catalyst).
+#   pagerank_knn, whose edge pin now goes through ckpt(), is already in
+#   the kNN block.
 # Names absent from the registry are ignored (a pytest guards against
 # typos).  Every registry entry, windowed or not, is parity-checked
 # in-repo against its DuckDB oracle at sf0.001
@@ -143,6 +149,10 @@ ORACLES: dict[str, str] = {}
 # the driver's sf0.01 each round (scripts/window_check.py all ->
 # measurements/parity_sf0.01_r0N.json).
 _FRONT: tuple[str, ...] = (
+    "bm25_search",
+    "market_basket_lift",
+    "nb_quality_score",
+    "maple_juice_word_count",
     # -- round-11 window -----------------------------------------------
     # 1-6: the kNN graph family — knn_edges_ivf's top-k became a bounded
     #      TWO-LEVEL aggregate with the NULL-cosine ordering fix

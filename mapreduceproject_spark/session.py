@@ -20,16 +20,63 @@ Scale posture (100 TB mindset, tested on local[32]):
   goes on the executors' ``PYTHONPATH`` so the daemon module is found
   before any ``addPyFile``.  Other masters keep ``pyspark.daemon``: there
   the module would have to be shipped at submit time.
+
+Session start maps a JVM class-data archive (JDK 13+ dynamic AppCDS)
+kept in ``.jvm-cds/`` at the checkout root.  It holds only the JDK and
+Spark classes the driver JVM loaded, never data, plans or results.
+- Mapped: when ``get_spark`` launches the driver JVM and a published
+  archive for this JDK and Spark exists, the JVM maps it with
+  ``-XX:SharedArchiveFile``.  That roughly halves the start and the first
+  job's class loading.  The key covers the ``java`` that ``spark-class``
+  runs, its ``lib/modules``, the archive directory and the
+  ``$SPARK_HOME/jars`` listing.
+- Written: when none exists, the JVM writes one at exit with
+  ``-XX:ArchiveClassesAtExit`` to a per-pid temp name.  Once that JVM has
+  exited with status 0, the file is renamed to ``<key>-<bytes>.jsa``, and
+  other archives and dead-pid temp files are deleted.  That run's exit
+  takes about 10 s longer; the archive takes about 150 MB of disk.  An
+  archive whose size no longer matches its name is deleted and written
+  again, because the JVM crashes on a truncated one.  One the JVM rejects
+  for other reasons is kept and ignored, with one ``[cds,dynamic]`` line
+  on stderr.
+- Skipped: the JVM accepts an archive only with no non-empty directory on
+  its classpath, so the launch points ``SPARK_CONF_DIR`` at an empty
+  directory.  The archive is skipped when the real conf directory holds
+  anything but ``*.template`` files, when ``spark.driver.extraClassPath``,
+  ``HADOOP_CONF_DIR``, ``YARN_CONF_DIR`` or ``SPARK_DIST_CLASSPATH``
+  extend the classpath, when no JVM is launched here
+  (``PYSPARK_GATEWAY_PORT``, or a gateway already running), and when the
+  checkout is not writable.
+The flags go in ``spark.driver.defaultJavaOptions``, so a caller's
+``spark.driver.extraJavaOptions`` still applies.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import re
+import shutil
+import subprocess
 from pathlib import Path
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+CDS_DIR = Path(__file__).resolve().parent.parent / ".jvm-cds"
+# CDS warnings stay off stdout, which carries bench.py's JSON and the CLI
+# verbs' output: a writing run warns once per class it cannot archive
+# (signed jars, pre-JDK-6 bytecode), hundreds of lines.  A rejected archive
+# still says so, once, on stderr.
+_CDS_LOG = "-Xlog:cds*=off -Xlog:cds=error,cds+dynamic=warning:stderr"
+# how long the exit hook waits for a writing JVM (stop, dump, exit ≈ 12 s)
+_DUMP_WAIT_S = 120
+# (gateway process, temp archive) for each JVM this process asked to write
+_dumps: list[tuple[subprocess.Popen, Path]] = []
 
 
 def get_spark(
@@ -73,6 +120,141 @@ def get_spark(
         builder = builder.config(
             "spark.python.daemon.module", "mapreduceproject_spark._pyworker"
         ).config("spark.executorEnv.PYTHONPATH", str(Path(__file__).resolve().parent.parent))
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    launch = _cds_launch(conf) if SparkContext._gateway is None else None
+    flags, dump = launch or (None, None)
+    if flags:
+        conf["spark.driver.defaultJavaOptions"] = " ".join(
+            filter(None, (flags, conf.get("spark.driver.defaultJavaOptions")))
+        )
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    if not flags:
+        return builder.getOrCreate()
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = str(CDS_DIR / "conf")
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+    if dump is not None:
+        # our own reference: callers may drop SparkContext._gateway
+        _dumps.append((SparkContext._gateway.proc, dump))
+    return spark
+
+
+def _java_home() -> Path | None:
+    """The JDK whose ``java`` ``spark-class`` runs, if it is JDK 13+."""
+    if os.environ.get("JAVA_HOME"):
+        java = os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+    else:
+        java = shutil.which("java")
+    if not java or not os.path.isfile(java):
+        return None
+    home = Path(os.path.realpath(java)).parent.parent
+    try:
+        release = (home / "release").read_text()
+    except OSError:
+        return None
+    m = re.search(r'^JAVA_VERSION="(\d+)', release, re.M)
+    return home if m and int(m.group(1)) >= 13 else None
+
+
+def _archive_key(home: Path, spark_home: str) -> str:
+    st = (home / "lib" / "modules").stat()
+    h = hashlib.sha256(repr((str(home), st.st_size, st.st_mtime_ns, str(CDS_DIR))).encode())
+    with os.scandir(os.path.join(spark_home, "jars")) as it:
+        for name, size in sorted((e.name, e.stat().st_size) for e in it):
+            h.update(f"{name}\0{size}\n".encode())
+    return h.hexdigest()[:16]
+
+
+def _cds_launch(conf: dict[str, str]) -> tuple[str, Path | None] | None:
+    """JVM flags that map or write the archive, and the temp file a write
+    goes to; None when the launch cannot use an archive (module docstring)."""
+    if "spark.driver.extraClassPath" in conf or any(
+        os.environ.get(v)
+        for v in ("PYSPARK_GATEWAY_PORT", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+    ):
+        return None
+    home = _java_home()
+    if home is None or re.search(r"[\s'\"\\]", str(CDS_DIR)):
+        return None
+    spark_home = _find_spark_home()
+    real_conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    if os.path.isdir(real_conf) and not all(n.endswith(".template") for n in os.listdir(real_conf)):
+        return None
+    try:
+        key = _archive_key(home, spark_home)
+        (CDS_DIR / "conf").mkdir(parents=True, exist_ok=True)
+        if os.listdir(CDS_DIR / "conf") or not os.access(CDS_DIR, os.W_OK):
+            return None
+    except OSError:
+        return None
+    _publish()  # a JVM an earlier session of this process asked to write
+    for f in CDS_DIR.glob(f"{key}-*.jsa"):
+        if _valid(f):
+            return f"-XX:SharedArchiveFile={f} {_CDS_LOG}", None
+        f.unlink(missing_ok=True)
+    tmp = CDS_DIR / f"{key}.{os.getpid()}.tmp"
+    return f"-XX:ArchiveClassesAtExit={tmp} {_CDS_LOG}", tmp
+
+
+def _valid(f: Path) -> bool:
+    """The archive still has the byte size it was published with."""
+    try:
+        return f.stat().st_size == int(f.stem.rsplit("-", 1)[1])
+    except (OSError, ValueError, IndexError):
+        return False
+
+
+def _publish() -> None:
+    """Publish each written archive whose JVM exited with status 0, and
+    delete every other archive and every dead process's temp file."""
+    for entry in list(_dumps):
+        proc, tmp = entry
+        if proc.poll() is None:
+            continue
+        _dumps.remove(entry)
+        if proc.returncode != 0 or not tmp.is_file():
+            tmp.unlink(missing_ok=True)
+            continue
+        final = tmp.with_name(f"{tmp.name.split('.')[0]}-{tmp.stat().st_size}.jsa")
+        os.replace(tmp, final)
+        for f in CDS_DIR.glob("*.jsa"):
+            if f != final:
+                f.unlink(missing_ok=True)
+        for f in CDS_DIR.glob("*.tmp"):
+            pid = f.name.split(".")[1]
+            if pid.isdigit() and not _alive(int(pid)):
+                f.unlink(missing_ok=True)
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _finish_dumps() -> None:
+    """At exit: let each writing JVM finish (its stdin closing stops the
+    gateway, as it would when this process exits), then publish."""
+    for proc, _ in _dumps:
+        if proc.poll() is None:
+            proc.stdin.close()
+            try:
+                proc.wait(_DUMP_WAIT_S)
+            except subprocess.TimeoutExpired:
+                pass
+    _publish()
+
+
+# registered first, so it runs after any later exit hook that stops Spark
+atexit.register(_finish_dumps)

@@ -5,6 +5,8 @@ prefix-light plan_info contract."""
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -93,6 +95,90 @@ def test_knn_edges_null_cosine_sorts_last(spark):
     # neighbors: src 0's top-2 are real-cosine dsts, never dst 5
     zero_dsts = {d for s, d in got if s == 0}
     assert 5 not in zero_dsts
+
+
+def test_zero_norm_cosine_is_null_never_nan(spark):
+    """A zero vector has no direction: every cosine form returns NULL for
+    it (vectors.py's nullif), never NaN.  The kNN top-k sorts a NULL
+    cosine last by coalescing it to +inf; a NaN would slip past that
+    coalesce and sort after +inf, so the order holds only while NaN
+    cannot occur."""
+    from mapreduceproject_spark.functions import vectors as vx
+
+    df = spark.createDataFrame(
+        [(1, [0.0, 0.0, 0.0], [1.0, 2.0, 3.0]),
+         (2, [0.0, 0.0, 0.0], [0.0, 0.0, 0.0]),
+         (3, [1.0, 2.0, 3.0], [0.0, 0.0, 0.0]),
+         (4, [1.0, 0.0, 0.0], [0.5, 0.5, 0.0])],
+        "i int, a array<double>, b array<double>",
+    )
+    qa, qb = vx.quantize(F.col("a")), vx.quantize(F.col("b"))
+    n2 = lambda q: F.aggregate(q, F.lit(0).cast("long"), lambda acc, x: acc + x * x)  # noqa: E731
+    forms = {
+        "cos": vx.cosine_similarity(F.col("a"), F.col("b")),
+        "qcos": vx.quantized_cosine(F.col("a"), F.col("b")),
+        "pcos": vx.prequantized_cosine(qa, qb, n2(qa), n2(qb)),
+    }
+    rows = df.select(
+        "i",
+        *[c.alias(n) for n, c in forms.items()],
+        *[F.isnan(c).alias(f"{n}_nan") for n, c in forms.items()],
+    ).collect()
+    for r in rows:
+        for n in forms:
+            assert r[f"{n}_nan"] is not True, (r.i, n)
+            assert (r[n] is None) == (r.i != 4), (r.i, n, r[n])
+
+
+def _py_knn_edges(rows, num_centroids: int, k: int) -> set[tuple[int, int]]:
+    """knn_edges_ivf's answer in plain Python: quantized cosine (NULL for
+    a zero norm), cells by max cosine to the centroids (NULL lowest, ties
+    to the lowest centroid id), then per src the top k by cosine DESC
+    NULLS LAST, dst ASC."""
+    from mapreduceproject_spark.functions.vectors import QUANT_SCALE
+
+    q = {i: [math.floor(x * QUANT_SCALE) for x in v] for i, v in rows}
+    n2 = {i: sum(x * x for x in v) for i, v in q.items()}
+
+    def cos(a, b):
+        den = math.sqrt(n2[a]) * math.sqrt(n2[b])
+        return None if den == 0.0 else sum(x * y for x, y in zip(q[a], q[b])) / den
+
+    def key(c):
+        return (c is not None, c if c is not None else 0.0)
+
+    cell = {i: max(range(num_centroids), key=lambda c: (*key(cos(i, c)), -c)) for i in q}
+    edges = set()
+    for s in q:
+        cands = [(cos(s, d), d) for d in q if d != s and cell[d] == cell[s]]
+        cands.sort(key=lambda t: (t[0] is None, -t[0] if t[0] is not None else 0.0, t[1]))
+        edges |= {(s, d) for _, d in cands[:k]}
+    return edges
+
+
+def test_knn_edges_zero_vectors_match_nulls_last_reference(spark):
+    """With zero vectors in the input (NULL cosine to everything, and an
+    all-NULL candidate list for a zero src), the edge build returns the
+    same top-k as a cosine DESC NULLS LAST, dst ASC reference computed
+    without Spark."""
+    rows = [
+        (0, [1.0, 0.0, 0.0, 0.0]),
+        (1, [0.0, 1.0, 0.0, 0.0]),
+        (2, [1.0, 0.1, 0.0, 0.0]),
+        (3, [0.9, 0.2, 0.0, 0.0]),
+        (4, [0.8, 0.1, 0.1, 0.0]),
+        (5, [0.0, 0.0, 0.0, 0.0]),
+        (6, [0.1, 0.9, 0.0, 0.0]),
+        (7, [0.0, 0.0, 0.0, 0.0]),
+        (8, [0.2, 0.8, 0.3, 0.0]),
+        (9, [-0.5, 0.1, 0.0, 0.2]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    k = 3
+    got = {tuple(r) for r in knn_edges_ivf(emb, "vec_id", "embedding", 2, k).collect()}
+    want = _py_knn_edges(rows, 2, k)
+    assert got == want
+    assert {d for s, d in got if s == 5} == {0, 2, 3}  # all NULL: dst order
 
 
 def test_knn_edges_topk_aggregation_state_bounded(spark, sf_dir):
