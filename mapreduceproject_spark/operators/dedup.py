@@ -525,37 +525,29 @@ def simhash_dedup(
 # 4. character n-gram jaccard
 # ---------------------------------------------------------------------------
 
-# Exact-mode scratch model, calibrated from the 100× fixture run that
-# filled the disk: ~148.5 M input chars drove ~70 GB of shuffle scratch
-# before dying — ≈480 B/char end-to-end.  The per-(id,hash) row is only
-# ~16 B, but the gram stream is sorted for two windows (each with spill
-# files), and the verify join materializes BOTH docs' gram arrays on
-# every surviving candidate row, which is where the bulk of the bytes
-# land.  A round-3 note estimated 48 B/char from a mis-measured char
-# count; the 10× fixture (14.9 M chars, exact mode, completed) fits the
-# 480 B/char model at ~7 GB scratch.
-NGRAM_SCRATCH_BYTES_PER_CHAR = 480
 NGRAM_EST_HASHES = 24
 
 
-# Below this estimated scratch, "auto" NEVER falls back: a few GiB of
-# exact-mode scratch is affordable on any host that can run Spark at
-# all, and the floor makes the registered query's algorithm (and its
-# oracle parity) independent of how full a driver/CI box's disk happens
-# to be — the fallback is for corpus-scale scratch (the 67 GB 100×
-# DNF), not for small fixtures on crowded machines.
+# Below this estimated prefix-light scratch, ngram_jaccard_dedup never
+# reroutes to the sharded plan: a few GiB of scratch is affordable on any
+# host that can run Spark at all, and the floor makes the registered
+# query's plan (and its oracle parity) independent of how full a
+# driver/CI box's disk happens to be — sharding is for corpus-scale
+# scratch (the 1000× fixture), not for small fixtures on crowded machines.
 NGRAM_SCRATCH_FLOOR_BYTES = 4 << 30
 
-# Prefix-light fallback scratch model, calibrated at the 1000× fixture
-# (5M docs, ~1.5G chars): the single collect_list(struct(df,h)) gram
-# shuffle plus the prefix self-join spilled ~60-70 GB — ≈48 B/char
-# end-to-end, a 10× reduction on the exact path's 480 but still
-# corpus-proportional.  "auto" cannot route below it (prefix IS the
-# lightest exact mode), so when even this estimate exceeds the headroom
-# the operator completes-or-dies on disk like any Spark job would — but
-# it SAYS so up front (print + plan_info["light_scratch_exceeds"]), and
-# the knowing caller can choose the bounded-cost lossy triage
-# (est_candidates="char", est_bucket_cap=...) or a real cluster, where
+# Share of the free space on spark.local.dir that a single-pass run, or
+# one sharded pass, may plan to fill.
+NGRAM_SCRATCH_HEADROOM = 0.5
+
+# Prefix-light scratch model, calibrated at the 1000× fixture (5M docs,
+# ~1.5G chars): the single collect_list(struct(df,h)) gram shuffle plus
+# the prefix self-join spilled ~60-70 GB — ≈48 B/char end-to-end,
+# corpus-proportional.  When this estimate exceeds the headroom and no
+# sane shard count bounds it, the operator completes-or-dies on disk like
+# any Spark job would — but it SAYS so up front (print +
+# plan_info["light_scratch_exceeds"]), and the knowing caller can choose
+# the bounded-cost lossy triage (triage_cap=...) or a real cluster, where
 # this is <1 GB/node across 100 executors.
 NGRAM_LIGHT_SCRATCH_BYTES_PER_CHAR = 48
 
@@ -583,50 +575,44 @@ NGRAM_MAX_SHARDS = 32
 # clears that routinely, one box does not).
 NGRAM_EXACT_CANDIDATE_CEILING = 2_000_000_000
 
-# Bucket cap the mass_policy="triage" escalation hands the char-minhash
-# candidate space (the SCALING.md production-cap measurement point);
-# callers can override via est_bucket_cap.
+# Bucket cap the escalate_above escalation hands the char-minhash
+# candidate space (the SCALING.md production-cap measurement point).
 NGRAM_TRIAGE_BUCKET_CAP = 256
 
 
 class _CandidateMassEscalation(Exception):
     """Internal control flow: the sharded exact plan's pass-0 candidate
-    extrapolation crossed the caller's ceiling under
-    ``mass_policy="triage"`` — the driver catches this and routes to the
-    bounded-cost char-minhash triage instead (sharded scratch already
-    cleaned up by the raiser)."""
+    extrapolation crossed the caller's ``escalate_above`` — the driver
+    catches this and routes to the bounded-cost char-minhash triage
+    instead (sharded scratch already cleaned up by the raiser)."""
 
     def __init__(self, pass0_pairs: int, est_total: int):
         self.pass0_pairs, self.est_total = pass0_pairs, est_total
         super().__init__(f"est {est_total:,} candidates > ceiling")
 
 
-def _ngram_scratch_mode(
-    policy: str, need_bytes: int, free_bytes: int, headroom: float = 0.5
-) -> str:
-    """Resolve the verify mode: explicit policies pass through; "auto"
-    picks exact verification unless its estimated shuffle scratch BOTH
-    exceeds the small-corpus floor and exceeds ``headroom`` of the free
-    bytes on the shuffle-scratch volume (the 100×-fixture failure mode:
-    dedup_ngram_jaccard DNF'd on DISK, not compute, round 3)."""
-    if policy in ("exact", "estimate", "sharded"):
-        return policy
-    if policy != "auto":
-        raise ValueError(
-            f"scratch_policy must be exact|estimate|sharded|auto, got {policy!r}"
-        )
-    if need_bytes <= NGRAM_SCRATCH_FLOOR_BYTES:
-        return "exact"
-    return "exact" if need_bytes <= free_bytes * headroom else "estimate"
-
-
-def _ngram_shards_needed(light_need_bytes: int, free_bytes: int, headroom: float) -> int:
+def _ngram_shards_needed(light_need_bytes: int, free_bytes: int) -> int:
     """Shard count so an OFF-DIAGONAL pass (2 shards of corpus in
     flight) fits the headroom: per-pass scratch ≈ (2/S)·light_need."""
     import math
 
-    budget = max(int(free_bytes * headroom), 1)
+    budget = max(int(free_bytes * NGRAM_SCRATCH_HEADROOM), 1)
     return max(2, math.ceil(2 * light_need_bytes / budget))
+
+
+def _scratch_dir(spark) -> str:
+    """The first spark.local.dir entry: where shuffle scratch lands."""
+    return (spark.conf.get("spark.local.dir", None) or "/tmp").split(",")[0]
+
+
+def _ngram_gram_hashes(frame: DataFrame, n: int) -> DataFrame:
+    """Distinct (_id, h) char-n-gram hashes of ``frame``'s lower-cased
+    ``_txt``."""
+    return (
+        char_ngram_rows(frame, F.lower(F.col("_txt")), n, keep=["_id"])
+        .select("_id", hash60(F.col("g")).alias("h"))
+        .distinct()
+    )
 
 
 def _ngram_jaccard_minhash_verify(
@@ -636,29 +622,32 @@ def _ngram_jaccard_minhash_verify(
     length_band: int,
     threshold: float,
     num_hashes: int,
-    seed: int = 42,
-    max_bucket_size: int | None = None,
+    max_bucket_size: int,
     loss_observation=None,
+    seed: int = 42,
 ) -> DataFrame:
-    """Scratch-light fallback: MinHash width-1-band candidates, then the
-    SAME exact array-intersect jaccard verify as the main path.
+    """The lossy triage plan: MinHash width-1-band candidates with
+    saturated buckets dropped, then the SAME exact array-intersect
+    jaccard verify as the exact plan.
 
     The gram stream is shuffled exactly ONCE — the per-doc gram-set
     arrays are collected in a single groupBy, and the minhash signatures
     are derived FROM those arrays with in-plan F.aggregate folds (no
     second gram-stream exchange; a first cut that shuffled grams once
     for signatures and once for arrays still wrote ~70 GB at the 100×
-    fixture and died of disk exactly like the exact path).  The exact
-    path's two additional full gram-stream sorts (document-frequency
-    window + prefix-rank window) never run either.  Width-1 bands (a
-    bucket per permutation minimum) give candidate recall 1-(1-J)^K per
-    true pair — at K=24 and J≥0.55 a miss has probability ≈5e-9 — and
-    every emitted pair carries its EXACT jaccard (array_intersect on the
-    collected gram sets), so output values are identical to exact mode;
-    only an astronomically unlikely candidate miss can differ (pytest
-    pins full equality on the fixture).  With ``max_bucket_size`` set
-    the contract weakens to bounded-cost: saturated buckets are dropped
-    before pairing (see ``ngram_jaccard_dedup``'s ``est_bucket_cap``).
+    fixture).  Width-1 bands (a bucket per permutation minimum) give
+    candidate recall 1-(1-J)^K per true pair — at K=24 and J≥0.55 a miss
+    has probability ≈5e-9 — and every emitted pair carries its EXACT
+    jaccard (array_intersect on the collected gram sets), so emitted
+    values always match the exact plan.  The loss is the bucket cap: a
+    width-1 band whose minimum is a hot common gram collects a
+    block-sized bucket (341 M candidate pairs at the 100× fixture
+    uncapped, because that corpus's BACKGROUND char-trigram similarity
+    sits near the threshold), and buckets larger than
+    ``max_bucket_size`` are dropped before pairing — pairs whose every
+    shared-minimum bucket is viral are not emitted.  The registered
+    gauges ``ngram_jaccard_capped_recall`` and
+    ``ngram_jaccard_triage_recall`` measure that loss.
     """
     params = minhash_params(num_hashes, seed)
     arrs = grams.groupBy("_id").agg(F.collect_list("h").alias("hs")).persist()
@@ -680,29 +669,14 @@ def _ngram_jaccard_minhash_verify(
         .join(meta, "_id")
         .persist()
     )
-    buckets = sigs.select(
-        "_id", *block_cols, "_len", "ng", F.posexplode("sig").alias("hi", "hv")
+    buckets = _drop_saturated_buckets(
+        sigs.select(
+            "_id", *block_cols, "_len", "ng", F.posexplode("sig").alias("hi", "hv")
+        ),
+        ["hi", "hv"],
+        max_bucket_size,
+        observation=loss_observation,
     )
-    if max_bucket_size is not None:
-        # a width-1 band whose minimum is a hot common gram collects a
-        # block-sized bucket — measured 341 M candidate pairs at the
-        # 100× fixture uncapped, because that corpus's BACKGROUND
-        # char-trigram similarity sits near the threshold.  Lossy by
-        # design: pairs whose every shared-minimum bucket is viral are
-        # not emitted — bounded cost in exchange for recall inside
-        # saturated buckets.  Default None keeps the estimate≡exact
-        # contract.
-        buckets = _drop_saturated_buckets(
-            buckets, ["hi", "hv"], max_bucket_size, observation=loss_observation
-        )
-    elif loss_observation is not None:
-        # uncapped: nothing can be dropped — attach the same metric pair
-        # so callers read one uniform contract regardless of the cap
-        buckets = buckets.observe(
-            loss_observation,
-            F.count(F.lit(1)).alias("bucket_rows_total"),
-            F.sum(F.lit(0)).cast("long").alias("bucket_rows_dropped"),
-        )
     a = buckets.select(
         F.col("_id").alias("id_a"),
         *[F.col(c).alias(f"{c}_a") for c in block_cols],
@@ -755,7 +729,7 @@ def _ngram_jaccard_minhash_verify(
     ).filter(F.col("jaccard") >= threshold)
 
 
-# Broadcast bound for the prefix-light fallback's document-frequency
+# Broadcast bound for the prefix-light plan's document-frequency
 # table: only grams this hot get their true df in the prefix ORDER; the
 # long tail defaults to df=1 (hash tie-break keeps the order total, and
 # PPJoin is exact under ANY total order — rarity only shapes candidate
@@ -813,32 +787,36 @@ def _ngram_jaccard_prefix_light(
     _stage_chunks: int = 4,
     _stats: dict | None = None,
 ) -> DataFrame:
-    """Scratch-light EXACT fallback (the shipped default): the same
-    PPJoin rarest-first prefix filter as the main exact path, built
-    without its two full gram-stream window sorts.
+    """The exact n-gram jaccard plan: PPJoin (Xiao et al., WWW'08)
+    rarest-first prefix filtering, built without a gram-stream sort.
 
-    The window path's scratch (measured ~480 B/char, the 100× DNF) is
-    dominated by sorting the gram stream twice (document-frequency
-    window over h, prefix-rank window over _id) plus the verify join.
-    Here instead: (1) gram document frequencies come from ONE map-side-
-    combined groupBy whose output is VOCAB-sized, truncated to the
-    {NGRAM_HOT_DF_LIMIT} hottest grams and broadcast; (2) the df rides
-    the gram rows through a broadcast join (narrow — no shuffle); (3) a
-    single gram-stream groupBy collects each doc's (df, h) structs, and
-    the rarest-first sort + prefix slice happen INSIDE the array
-    (``sort_array`` + ``slice``, JVM codegen, zero extra exchanges).
-    Long-tail grams beyond the broadcast bound order as df=1 with hash
-    tie-break — a different but still TOTAL order, so the prefix theorem
-    (Xiao et al., WWW'08) holds and the output is bit-identical to exact
-    mode (pytest pins it); only candidate volume can differ, and only
+    Grams get a global total order (ascending corpus frequency, hash
+    tie-break), each doc keeps only its first ``ng − ⌈t·ng⌉ + 1`` grams
+    under that order, and candidate pairs must share a *prefix* gram in
+    addition to the block conditions.  Any pair with jaccard ≥ t has
+    overlap ≥ ⌈t·max(na,nb)⌉, which forces the per-doc prefixes to
+    intersect — so the filter prunes candidates without ever dropping a
+    true pair, and the output equals the blocked cross-product
+    (:func:`_ngram_jaccard_blocked`, pytest pins it).  Rarest-first
+    ordering makes prefix grams low-frequency, so the prefix equi-join
+    explodes far less than the block cross product.
+
+    The order is built in three steps: (1) gram document frequencies
+    come from ONE map-side-combined groupBy whose output is VOCAB-sized,
+    truncated to the {NGRAM_HOT_DF_LIMIT} hottest grams and broadcast;
+    (2) the df rides the gram rows through a broadcast join (narrow — no
+    shuffle); (3) a single gram-stream groupBy collects each doc's
+    (df, h) structs, and the rarest-first sort + prefix slice happen
+    INSIDE the array (``sort_array`` + ``slice``, JVM codegen, zero
+    extra exchanges).  Long-tail grams beyond the broadcast bound order
+    as df=1 with hash tie-break — still a TOTAL order, so the prefix
+    theorem holds; only candidate volume depends on the order, and only
     hot grams — which always get their true df — drive virality.
 
     Cost at 100 TB: one gram-stream shuffle (the struct collect), one
     prefix-stream self-join (~(1-t) of the gram volume on rarest-first
     keys, the PPJoin win), one candidate-bounded verify join against the
-    SAME persisted arrays.  No cap, no recall trade: this retires the
-    char-minhash fallback's measured 0.041-recall cliff by never
-    sketching at all.
+    SAME persisted arrays.  No cap, no recall trade.
     """
     d = grams.groupBy("h").count()
     hot = d.filter(F.col("count") >= 2).orderBy(
@@ -921,8 +899,8 @@ def _ngram_jaccard_prefix_light(
             # pass-scoped callers unpersist between passes so per-pass
             # cache/scratch doesn't accumulate
             _persist_registry.append(arrs)
-    # α = ⌈t·n⌉ with the same epsilon discipline as the window path:
-    # float noise may only LENGTHEN the prefix
+    # α = ⌈t·n⌉ with a tiny epsilon: float noise may only LENGTHEN the
+    # prefix (a shorter-than-exact prefix would lose true pairs)
     plen = (
         F.col("ng")
         - F.ceil(F.col("ng") * F.lit(threshold) - F.lit(1e-9))
@@ -975,7 +953,7 @@ def _ngram_jaccard_prefix_light(
     # exchange and sort.  Exactness: the pair's FIRST common gram under
     # the global order sits in both prefixes at the pair's minimal
     # ranks, where the bound is loosest — a qualifying pair always
-    # keeps at least that row (pytest pins prefix-light ≡ exact).  At
+    # keeps at least that row (pytest pins prefix-light ≡ blocked).  At
     # the 1000× fixture this is the difference between a candidate
     # stream the box can sort and the 66 GB pre-distinct blowup that
     # filled the volume: replica-invariant grams (digits survive the
@@ -1052,9 +1030,7 @@ def _ngram_jaccard_prefix_sharded(
     shards: int,
     loss_observation=None,
     plan_info: dict | None = None,
-    mass_policy: str = "proceed",
-    mass_ceiling: int = NGRAM_EXACT_CANDIDATE_CEILING,
-    scratch_headroom: float = 0.5,
+    escalate_above: int | None = None,
 ) -> DataFrame:
     """EXACT prefix-light dedup in S doc-sharded passes with BOUNDED
     per-pass scratch — the round-6 1000×-fixture closure: the single-pass
@@ -1073,7 +1049,7 @@ def _ngram_jaccard_prefix_sharded(
     ``NGRAM_UNSTAGED_PEAK_FACTOR`` (one job holds every exchange's
     shuffle files at once plus the collect's external-sort spill) —
     clears both the {NGRAM_SCRATCH_FLOOR_BYTES>>30} GiB floor and
-    ``scratch_headroom`` of free scratch space, each pass runs as ONE
+    ``NGRAM_SCRATCH_HEADROOM`` of free scratch space, each pass runs as ONE
     job with an in-memory persist instead.  Motivation is
     measured, not stylistic: the staged form's wall-clock TRIPLED on a
     host reboot (r8 fold 15.6-22.8 s vs 44-70 s post-reboot,
@@ -1116,9 +1092,7 @@ def _ngram_jaccard_prefix_sharded(
     tagged = base.withColumn(
         "_shard", F.pmod(F.xxhash64(F.col("_id")), F.lit(shards)).cast("int")
     )
-    local_dir = (
-        spark.conf.get("spark.local.dir", None) or "/tmp"
-    ).split(",")[0]
+    local_dir = _scratch_dir(spark)
     out_dir = os.path.join(
         local_dir, f"ngram-sharded-{uuid.uuid4().hex[:12]}"
     )
@@ -1126,8 +1100,8 @@ def _ngram_jaccard_prefix_sharded(
         (i, j) for i in range(shards) for j in range(i + 1, shards)
     ]
     # adaptive staging decision: one cheap length-column scan + a free-
-    # space probe (the same policy inputs ngram_jaccard_dedup's auto
-    # resolver reads) — never data to the driver.  The comparison uses
+    # space probe (the same inputs ngram_jaccard_dedup's routing reads)
+    # — never data to the driver.  The comparison uses
     # the UNSTAGED peak, which is ~4× the 48 B/char light model: an
     # unstaged pass keeps every exchange's shuffle files alive until the
     # job ends AND pays the array collect's external-sort spill
@@ -1142,7 +1116,7 @@ def _ngram_jaccard_prefix_sharded(
     per_pass_need = (2 * est_chars // shards) * NGRAM_LIGHT_SCRATCH_BYTES_PER_CHAR
     unstaged_peak = per_pass_need * NGRAM_UNSTAGED_PEAK_FACTOR
     stage_passes = unstaged_peak > NGRAM_SCRATCH_FLOOR_BYTES and (
-        unstaged_peak > free * scratch_headroom
+        unstaged_peak > free * NGRAM_SCRATCH_HEADROOM
     )
     if plan_info is not None:
         plan_info.update(
@@ -1151,11 +1125,7 @@ def _ngram_jaccard_prefix_sharded(
         )
     def _build_pass(p: int, i: int, j: int):
         sub = tagged.filter(F.col("_shard").isin([i, j]))
-        grams = (
-            char_ngram_rows(sub, F.lower(F.col("_txt")), n, keep=["_id"])
-            .select("_id", hash60(F.col("g")).alias("h"))
-            .distinct()
-        )
+        grams = _ngram_gram_hashes(sub, n)
         meta = sub.select("_id", *[F.col(c) for c in block_cols], "_len")
         # per-pass stage dir: the sub-job split inside prefix-light is
         # what keeps the pass's disk peak at one exchange, not the sum
@@ -1196,33 +1166,32 @@ def _ngram_jaccard_prefix_sharded(
             shutil.rmtree(stage_dir, ignore_errors=True)
 
     # --- pass 0 always runs alone: its candidate-mass checkpoint must be
-    # able to abort (mass_policy="triage") BEFORE any other pass's verify
+    # able to abort (escalate_above) BEFORE any other pass's verify
     # join is scheduled, and its loss observation must attach cleanly
     p0_res, pass_stats, p0_persists, p0_stage = _build_pass(0, *passes[0])
     if "candidate_pairs" in pass_stats:
-            # CANDIDATE-MASS CHECKPOINT (round 8, no-silent-caps): the
-            # diagonal pass covers 1/S^2 of the pair space, so its
-            # measured candidate count extrapolates the whole job's
-            # verify mass.  On a self-similar corpus that mass grows
-            # with the SQUARE of the duplication depth even after
-            # prefix + positional filtering (1000x fixture: 722M
-            # candidates in pass 0 alone -> ~11.5B total, each dragging
-            # two gram arrays through the verify join) - a property of
-            # the corpus, not the plan.  The run proceeds as the caller
-            # asked, but announces after ONE pass instead of after
-            # hours, and reports in-band.  Placement matters (round-9
-            # ADVICE fix): _ngram_jaccard_prefix_light materializes the
-            # candidate set and fills pass_stats EAGERLY, so announcing
-            # here — before res.write schedules pass 0's verify join
-            # over those candidates — warns before the most expensive
-            # stage of the pass, not after it has already been paid.
+        # CANDIDATE-MASS CHECKPOINT (no silent caps): the diagonal
+        # pass covers 1/S^2 of the pair space, so its measured
+        # candidate count extrapolates the whole job's verify mass.
+        # On a self-similar corpus that mass grows with the SQUARE of
+        # the duplication depth even after prefix + positional
+        # filtering (1000x fixture: 722M candidates in pass 0 alone ->
+        # ~11.5B total, each dragging two gram arrays through the
+        # verify join) - a property of the corpus, not the plan.  The
+        # run proceeds as the caller asked, but announces after ONE
+        # pass instead of after hours, and reports in-band.  Placement
+        # matters: _ngram_jaccard_prefix_light materializes the
+        # candidate set and fills pass_stats EAGERLY, so announcing
+        # here — before res.write schedules pass 0's verify join over
+        # those candidates — warns before the most expensive stage of
+        # the pass, not after it has already been paid.
         est_total = pass_stats["candidate_pairs"] * shards * shards
         if plan_info is not None:
             plan_info.update(
                 pass0_candidate_pairs=pass_stats["candidate_pairs"],
                 est_total_candidate_pairs=est_total,
             )
-        if est_total > mass_ceiling and mass_policy == "triage":
+        if escalate_above is not None and est_total > escalate_above:
             # the caller opted into bounded-cost routing: abandon the
             # exact sharded run HERE — before pass 0's verify join
             # is ever scheduled — clean the scratch, and let the
@@ -1235,13 +1204,13 @@ def _ngram_jaccard_prefix_sharded(
             raise _CandidateMassEscalation(
                 pass_stats["candidate_pairs"], est_total
             )
-        if est_total > mass_ceiling:
+        if escalate_above is None and est_total > NGRAM_EXACT_CANDIDATE_CEILING:
             print(
                 f"# ngram_jaccard_dedup[sharded]: pass 0 verified-"
                 f"candidate count {pass_stats['candidate_pairs']:,} "
                 f"implies ~{est_total:,} total - exact verification "
                 f"at this duplication density is cluster-scale work "
-                f"on any plan; consider est_candidates triage or "
+                f"on any plan; consider triage_cap or "
                 f"minhash/simhash first (proceeding as asked; "
                 f"machine-readable via plan_info)"
             )
@@ -1303,111 +1272,84 @@ def _ngram_jaccard_prefix_sharded(
         if os.path.isdir(d)
         and any(name.endswith(".parquet") for name in os.listdir(d))
     ]
-    has_parts = bool(live_dirs)
-    if not has_parts:
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        idt = base.schema["_id"].dataType
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("id_a", idt),
-                    StructField("id_b", idt),
-                    StructField("jaccard", DoubleType()),
-                ]
-            ),
-        )
+    if not live_dirs:
+        return _empty_pairs_frame(base, "jaccard")
     return spark.read.parquet(*live_dirs)
 
 
-def _ngram_jaccard_wordshingle_verify(
-    base: DataFrame,
-    grams: DataFrame,
-    meta: DataFrame,
+def _ngram_frames(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
     block_cols: list[str],
-    length_band: int,
-    threshold: float,
-    num_hashes: int,
-    shingle_k: int = 3,
-    seed: int = 42,
-    max_bucket_size: int | None = None,
-    loss_observation=None,
-) -> DataFrame:
-    """Estimate-mode candidates from WORD-SHINGLE minhash — the shipped
-    default fallback.  Word shingles are sparse where char trigrams are
-    dense: on corpora whose BACKGROUND char-trigram similarity sits near
-    the threshold (the 341 M-candidate / recall-0.041-at-cap-256 shape
-    measured at the 100× fixture), width-1 char buckets saturate and the
-    cap forfeits nearly every true pair, while word-shingle buckets stay
-    naturally small and need no cap at all.
-
-    The VERIFY is unchanged — exact char-ngram jaccard on the collected
-    gram arrays — so every emitted value is identical to exact mode;
-    only candidate recall can differ, and the registered gauge
-    (``ngram_jaccard_est_recall``) measures it.  Candidate recall per
-    true pair is 1-(1-Jw)^K over the pair's word-shingle jaccard Jw:
-    char-similar docs share most words, so Jw is high wherever char
-    jaccard clears the threshold (docs under ``shingle_k`` words shingle
-    as their whole text — they still bucket).
-
-    Cost shape at scale: one word-shingle shuffle (signatures), one
-    char-gram shuffle (verify arrays), one small bucket self-join —
-    the exact path's two extra full gram-stream window sorts never run,
-    which is the scratch the fallback exists to avoid.
-    """
-    arrs = grams.groupBy("_id").agg(F.collect_list("h").alias("hs")).persist()
-    sh = (
-        word_shingle_rows(base, F.lower(F.col("_txt")), shingle_k, keep=["_id"])
-        .select("_id", hash60(F.col("sh")).alias("h"))
-        .distinct()
+    length_col: str,
+    n: int,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(base, meta, grams) for the n-gram jaccard plans: ``base`` renames
+    the input to ``_id``/``_len``/``_txt``, ``meta`` is its per-doc
+    block/length row, ``grams`` the distinct (_id, h) gram hashes."""
+    # spread: the char-ngram explode is the dominant narrow stage
+    base = spread_for_compute(df).select(
+        F.col(id_col).alias("_id"),
+        *[F.col(c) for c in block_cols],
+        F.col(length_col).alias("_len"),
+        F.col(text_col).alias("_txt"),
     )
-    sigs = minhash_signatures(sh, num_hashes, seed)
-    # width-1 bands: maximum candidate recall per hash; bucket volume is
-    # bounded by the sparse shingle space, not by a cap
-    buckets = lsh_band_buckets(sigs, num_hashes, num_hashes)
-    if max_bucket_size is not None:
-        buckets = _drop_saturated_buckets(
-            buckets, ["band", "sig"], max_bucket_size, observation=loss_observation
-        )
-    elif loss_observation is not None:
-        buckets = buckets.observe(
-            loss_observation,
-            F.count(F.lit(1)).alias("bucket_rows_total"),
-            F.sum(F.lit(0)).cast("long").alias("bucket_rows_dropped"),
-        )
-    pairs = candidate_pairs_from_buckets(buckets, None)
-    # block/length pruning BEFORE the verify join — meta re-attaches at
-    # doc granularity, so the gram arrays are only materialized for
-    # pairs that survive the blocking predicate
-    m_a = meta.select(
+    # block/length metadata is one row per DOCUMENT — corpus-sized at
+    # 100 TB — so it is NOT dragged through the gram-level pipeline (that
+    # would widen every gram shuffle by the metadata bytes) and NOT
+    # broadcast (that would OOM); it re-attaches at doc granularity
+    meta = base.select("_id", *[F.col(c) for c in block_cols], "_len")
+    return base, meta, _ngram_gram_hashes(base, n)
+
+
+def _ngram_jaccard_blocked(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    block_cols: list[str],
+    length_col: str,
+    n: int = 3,
+    length_band: int = 8,
+    threshold: float = 0.6,
+) -> DataFrame:
+    """Reference n-gram jaccard: every blocked pair (same block columns,
+    |length diff| ≤ band) verified by array intersection — no prefix
+    filter, so it shares no candidate logic with the prefix-light plan.
+    Tests and the n-gram recall gauges use it as the independent truth;
+    its cost is quadratic per block, so it is not a production path.
+    """
+    _, meta, grams = _ngram_frames(df, id_col, text_col, block_cols, length_col, n)
+    arrs = grams.groupBy("_id").agg(F.collect_list("h").alias("hs"))
+    docs = arrs.select("_id", F.size("hs").cast("long").alias("ng")).join(
+        meta, "_id"
+    )
+    a = docs.select(
         F.col("_id").alias("id_a"),
         *[F.col(c).alias(f"{c}_a") for c in block_cols],
         F.col("_len").alias("len_a"),
+        F.col("ng").alias("na"),
     )
-    m_b = meta.select(
+    b = docs.select(
         F.col("_id").alias("id_b"),
         *[F.col(c).alias(f"{c}_b") for c in block_cols],
         F.col("_len").alias("len_b"),
+        F.col("ng").alias("nb"),
     )
-    cond = F.abs(F.col("len_a") - F.col("len_b")) <= length_band
+    cond = (F.col("id_a") < F.col("id_b")) & (
+        F.abs(F.col("len_a") - F.col("len_b")) <= length_band
+    )
     for c in block_cols:
         cond = cond & (F.col(f"{c}_a") == F.col(f"{c}_b"))
-    pruned = (
-        pairs.join(m_a, "id_a").join(m_b, "id_b").filter(cond).select("id_a", "id_b")
-    )
     inter = (
-        pruned.join(
-            arrs.select(F.col("_id").alias("id_a"), F.col("hs").alias("ha")), "id_a"
-        )
-        .join(
-            arrs.select(F.col("_id").alias("id_b"), F.col("hs").alias("hb")), "id_b"
-        )
+        a.join(b, cond)
+        .join(arrs.select(F.col("_id").alias("id_a"), F.col("hs").alias("ha")), "id_a")
+        .join(arrs.select(F.col("_id").alias("id_b"), F.col("hs").alias("hb")), "id_b")
         .select(
             "id_a",
             "id_b",
-            F.size("ha").cast("long").alias("na"),
-            F.size("hb").cast("long").alias("nb"),
+            "na",
+            "nb",
             F.size(F.array_intersect("ha", "hb")).cast("long").alias("both"),
         )
     )
@@ -1427,239 +1369,124 @@ def ngram_jaccard_dedup(
     n: int = 3,
     length_band: int = 8,
     threshold: float = 0.6,
-    prefix_filter: bool = True,
-    scratch_policy: str = "auto",
-    scratch_headroom: float = 0.5,
-    est_bucket_cap: int | None = None,
-    est_candidates: str = "prefix",
     shards: int | None = None,
+    triage_cap: int | None = None,
+    escalate_above: int | None = None,
     loss_observation=None,
     plan_info: dict | None = None,
-    mass_policy: str = "proceed",
-    mass_ceiling: int = NGRAM_EXACT_CANDIDATE_CEILING,
 ) -> DataFrame:
     """n-gram jaccard near-dup within (block_cols, |length diff| ≤ band).
 
-    ``mass_policy`` governs the sharded exact plan's candidate-mass
-    checkpoint (pass 0 extrapolates the whole job's verify mass):
-    "proceed" (default) announces past ``mass_ceiling`` and continues as
-    asked; "triage" — the explicit opt-in — abandons the exact run
-    before pass 0's verify join is scheduled and re-routes to the
-    bounded-cost char-minhash triage (est_bucket_cap or
-    {NGRAM_TRIAGE_BUCKET_CAP}) with exact verification of survivors.
-    Escalated output is bit-identical to est_candidates="char" at the
-    same cap (the ngram_jaccard_triage_recall gauge EARNS that), and
-    plan_info records the routing (``candidate_mass_escalated``).
+    One exact plan, one explicit lossy opt-in:
 
-    ``scratch_policy`` guards the exact path's shuffle scratch: "exact"
-    always runs full PPJoin + exact verification; "estimate" runs the
-    scratch-light fallback selected by ``est_candidates`` (ONE gram
-    shuffle, no full gram-stream window sorts, exact verify on the
-    collected gram sets); "sharded" runs the EXACT prefix-light plan in
-    ``shards`` doc-sharded passes with bounded per-pass scratch
-    (:func:`_ngram_jaccard_prefix_sharded` — eager, materializes each
-    pass); "auto" (default) estimates the
-    exact path's scratch from a one-column sum of ``length_col``
-    (~{NGRAM_SCRATCH_BYTES_PER_CHAR} B/char measured) and switches to
-    "estimate" when it would exceed ``scratch_headroom`` of the free
-    space on spark.local.dir — the round-3 100× fixture DNF'd on disk,
-    not compute, and this policy lets the same call complete by
-    explicit, logged fallback.  When even the prefix-light fallback's
-    ~{NGRAM_LIGHT_SCRATCH_BYTES_PER_CHAR} B/char estimate exceeds the
-    headroom (the 1000×-fixture shape) and it would fit in ≤
-    {NGRAM_MAX_SHARDS} shards, "auto" now routes to "sharded" — the
-    same exact output, S× the compute, bounded scratch — instead of
-    merely announcing the risk; past {NGRAM_MAX_SHARDS} shards it
-    announces and the caller chooses a cluster or the lossy triage.
+    * default — :func:`_ngram_jaccard_prefix_light`, PPJoin prefix
+      filtering with exact verification.  A one-column sum of
+      ``length_col`` prices its shuffle scratch
+      (~{NGRAM_LIGHT_SCRATCH_BYTES_PER_CHAR} B/char measured).  When that
+      exceeds both the {NGRAM_SCRATCH_FLOOR_BYTES>>30} GiB floor and
+      ``NGRAM_SCRATCH_HEADROOM`` of the free space on spark.local.dir,
+      and ≤ {NGRAM_MAX_SHARDS} doc shards bound it, the same exact
+      output is computed by :func:`_ngram_jaccard_prefix_sharded`
+      (S× the compute, (2/S)·corpus scratch per pass); past that it
+      announces the risk and runs single-pass.
+    * ``shards=S`` (S ≥ 2) forces the sharded plan with S shards.  It is
+      eager: each pass materializes to scratch parquet.
+    * ``triage_cap=C`` runs the lossy char-minhash triage
+      (:func:`_ngram_jaccard_minhash_verify`): width-1 minhash buckets
+      larger than C are dropped before pairing, survivors are verified
+      exactly.  ``ngram_jaccard_capped_recall`` measures its loss.  It
+      combines with neither ``shards`` nor ``escalate_above``.
+    * ``escalate_above=M`` applies to the sharded route: when pass 0's
+      candidate count, extrapolated to all passes, exceeds M, the exact
+      run is abandoned before any verify join and the triage runs at
+      {NGRAM_TRIAGE_BUCKET_CAP} (``ngram_jaccard_triage_recall``
+      measures it).  With the default None the run announces past
+      {NGRAM_EXACT_CANDIDATE_CEILING:,} candidates and proceeds.
 
-    ``est_candidates`` picks the fallback's candidate generator:
-
-    * "prefix" (default) — :func:`_ngram_jaccard_prefix_light`: the SAME
-      rarest-first PPJoin prefix filter as exact mode, rebuilt with one
-      gram shuffle + a broadcast df table instead of two gram-stream
-      window sorts.  EXACT — recall 1.0 by the prefix theorem, output
-      bit-identical to scratch_policy="exact" (pytest-pinned).  This
-      retires the round-4/5 finding that the fallback kept only 0.041
-      of true pairs at production cap on near-threshold corpora.
-    * "char" — char-trigram width-1 minhash candidates (the one-shuffle
-      signature trick; minimal scratch).  On corpora whose BACKGROUND
-      char-trigram similarity sits near the threshold its buckets
-      saturate (341 M candidates at the 100× fixture) and
-      ``est_bucket_cap`` turns it into a bounded-cost TRIAGE mode
-      (measured recall 0.041 at cap 256 there — see
-      ``ngram_jaccard_capped_recall``).
-    * "word" — word-shingle minhash candidates.  Naturally small
-      buckets, but recall against CHAR-ngram truth collapses on the
-      same near-threshold corpora (measured 0.048 at sf0.001 — word
-      overlap does not track char overlap there); kept for corpora
-      where the two spaces agree.
-
-    All three verify with exact char-ngram jaccard on the collected
-    gram arrays, so emitted VALUES always match exact mode — only
-    candidate recall differs, and the registered gauges
-    (``ngram_jaccard_est_recall`` for the shipped default,
-    ``ngram_jaccard_capped_recall`` for the capped char space) measure
-    it.
-
-    ``est_bucket_cap`` (minhash candidate spaces only) drops width-1
-    buckets larger than the cap before pairing.  None (default) is
-    lossless for "char"/"word" candidate GENERATION; ignored by
-    "prefix".  ``loss_observation`` (a ``pyspark.sql.Observation``)
-    makes the loss machine-readable IN-BAND: attached to the candidate
-    stream in fallback mode, it reports ``bucket_rows_total`` /
-    ``bucket_rows_dropped`` on the same job, so a pipeline caller reads
-    the saturated fraction from ``observation.get`` instead of stdout.
-    ``plan_info`` (a dict) receives the resolved plan driver-side before
-    any job runs: ``verify_mode`` ("exact"/"estimate"),
-    ``est_candidates``, ``est_bucket_cap``, ``loss_observed``.
+    ``loss_observation`` (a ``pyspark.sql.Observation``) makes the loss
+    machine-readable IN-BAND: attached to the candidate stream, it
+    reports ``bucket_rows_total`` / ``bucket_rows_dropped`` on the same
+    job (zero dropped on the exact routes).  ``plan_info`` (a dict)
+    receives the resolved plan driver-side: ``route``
+    ("prefix_light"/"sharded"/"triage"), ``shards``, ``triage_cap``,
+    ``light_scratch_exceeds``, and the sharded route's pass stats.
 
     Blocking: equi-join on block columns + a length range predicate — the
     classic blocking-key pattern.  At 100 TB the equi part shuffles; the
     range filter prunes inside each block.  (For unblockable corpora use
     :func:`minhash_lsh_dedup`; this operator is the high-precision verify
     for metadata-blockable data.)
-
-    ``prefix_filter`` adds PPJoin-style prefix filtering (Xiao et al.,
-    WWW'08) before the exact verify: grams get a global total order
-    (ascending corpus frequency, hash tie-break), each doc keeps only its
-    first ``n_grams − ⌈t·n_grams⌉ + 1`` grams under that order, and
-    candidate pairs must share a *prefix* gram in addition to the block
-    conditions.  Any pair with jaccard ≥ t has overlap ≥ ⌈t·max(na,nb)⌉,
-    which forces the (even longer) per-doc prefixes to intersect — so the
-    filter prunes candidates without ever dropping a true pair, and the
-    result set is bit-identical to the unfiltered plan.  The size
-    predicate ``t·na ≤ nb`` (exact consequence of J ≥ t) prunes further.
-    Rarest-first ordering makes prefix grams low-frequency, so the
-    prefix equi-join explodes far less than the block cross product.
     """
-    if est_candidates not in ("prefix", "word", "char"):
-        raise ValueError(
-            f"est_candidates must be prefix|word|char, got {est_candidates!r}"
-        )
-    if mass_policy not in ("proceed", "triage"):
-        raise ValueError(
-            f"mass_policy must be proceed|triage, got {mass_policy!r}"
-        )
-    # spread: the char-ngram explode below is the dominant narrow stage
-    base = spread_for_compute(df).select(
-        F.col(id_col).alias("_id"),
-        *[F.col(c) for c in block_cols],
-        F.col(length_col).alias("_len"),
-        F.col(text_col).alias("_txt"),
+    if shards is not None and shards < 2:
+        raise ValueError(f"shards must be >= 2, got {shards!r}")
+    if triage_cap is not None:
+        if shards is not None or escalate_above is not None:
+            raise ValueError(
+                "triage_cap combines with neither shards nor escalate_above"
+            )
+        if triage_cap < 1:
+            raise ValueError(f"triage_cap must be >= 1, got {triage_cap!r}")
+    base, meta, grams = _ngram_frames(
+        df, id_col, text_col, block_cols, length_col, n
     )
-    # block/length metadata is one row per DOCUMENT — corpus-sized at
-    # 100 TB — so it is NOT dragged through the gram-level pipeline (that
-    # would widen every gram shuffle by the metadata bytes) and NOT
-    # broadcast (that would OOM).  It re-attaches to the doc-level prefix
-    # rows below via an unhinted join that reuses the window's _id
-    # partitioning.
-    meta = base.select("_id", *[F.col(c) for c in block_cols], "_len")
-    resolved_shards = shards
-    auto_fits = False  # set when "auto" reroutes exact→prefix-light (scratch fits)
-    if scratch_policy == "auto" or (scratch_policy == "sharded" and shards is None):
+    info = plan_info if plan_info is not None else {}
+    light_exceeds = light_fits = False
+    if shards is None and triage_cap is None:
         import shutil
 
         # one-column scan (length_col is a few bytes/row columnar) — the
-        # only driver-visible scalar is the policy input, never data
+        # only driver-visible scalar is the routing input, never data
         est_chars = int(
             df.agg(F.sum(F.col(length_col).cast("long"))).first()[0] or 0
         )
-        local_dir = (
-            df.sparkSession.conf.get("spark.local.dir", None) or "/tmp"
-        ).split(",")[0]
+        local_dir = _scratch_dir(df.sparkSession)
         free = shutil.disk_usage(local_dir).free
         light_need = est_chars * NGRAM_LIGHT_SCRATCH_BYTES_PER_CHAR
-        light_exceeds = light_need > free * scratch_headroom
-        if scratch_policy == "sharded":
-            mode = "sharded"
-            resolved_shards = _ngram_shards_needed(
-                light_need, free, scratch_headroom
-            )
-        else:
-            mode = _ngram_scratch_mode(
-                "auto",
-                est_chars * NGRAM_SCRATCH_BYTES_PER_CHAR,
-                free,
-                scratch_headroom,
-            )
-            if mode == "estimate" and light_exceeds and est_candidates == "prefix":
-                # the 1000×-fixture finding: prefix-light is the LIGHTEST
-                # single-pass exact mode (~48 B/char), so when even it
-                # won't fit, slice the corpus instead of dying of disk
-                # mid-job — doc-sharded passes keep the output exact at
+        light_exceeds = light_need > free * NGRAM_SCRATCH_HEADROOM
+        light_fits = light_need <= NGRAM_SCRATCH_FLOOR_BYTES or not light_exceeds
+        if not light_fits:
+            s_needed = _ngram_shards_needed(light_need, free)
+            if s_needed <= NGRAM_MAX_SHARDS:
+                # slice the corpus instead of dying of disk mid-job —
+                # doc-sharded passes keep the output exact at
                 # (2/S)·corpus scratch per pass
-                s_needed = _ngram_shards_needed(light_need, free, scratch_headroom)
-                if s_needed <= NGRAM_MAX_SHARDS:
-                    mode = "sharded"
-                    resolved_shards = s_needed
-                    print(
-                        f"# ngram_jaccard_dedup: even the prefix-light "
-                        f"fallback's estimated scratch {light_need >> 30} GiB "
-                        f"exceeds {scratch_headroom:.0%} of free "
-                        f"{free >> 30} GiB on {local_dir}; running the EXACT "
-                        f"doc-sharded plan: {s_needed} shards, "
-                        f"{s_needed * (s_needed + 1) // 2} passes, "
-                        f"~{2 * light_need // s_needed >> 30} GiB peak "
-                        f"per-pass scratch — the largest single sub-job "
-                        f"stage, not the pass total: each pass "
-                        f"materializes its array table and candidate set "
-                        f"so exchanges never coexist on disk "
-                        f"(machine-readable via plan_info)"
-                    )
-                else:
-                    print(
-                        f"# ngram_jaccard_dedup: even the prefix-light "
-                        f"fallback's estimated scratch "
-                        f"{light_need >> 30} GiB "
-                        f"exceeds {scratch_headroom:.0%} of free {free >> 30} GiB "
-                        f"on {local_dir}, and bounding it needs "
-                        f"{s_needed} > {NGRAM_MAX_SHARDS} doc shards — this "
-                        f"box may run out of shuffle disk; options: run on "
-                        f"a cluster, or opt into bounded-cost "
-                        f"triage with est_candidates='char', est_bucket_cap=..."
-                    )
-            elif mode == "estimate":
+                shards = s_needed
                 print(
-                    f"# ngram_jaccard_dedup: estimated exact-mode scratch "
-                    f"{est_chars * NGRAM_SCRATCH_BYTES_PER_CHAR >> 30} GiB exceeds "
-                    f"{scratch_headroom:.0%} of free {free >> 30} GiB on "
-                    f"{local_dir}; switching to the scratch-light "
-                    f"{est_candidates!r} fallback (machine-readable via "
-                    f"plan_info/loss_observation)"
+                    f"# ngram_jaccard_dedup: estimated prefix-light "
+                    f"scratch {light_need >> 30} GiB exceeds "
+                    f"{NGRAM_SCRATCH_HEADROOM:.0%} of free "
+                    f"{free >> 30} GiB on {local_dir}; running the EXACT "
+                    f"doc-sharded plan: {s_needed} shards, "
+                    f"{s_needed * (s_needed + 1) // 2} passes, "
+                    f"~{2 * light_need // s_needed >> 30} GiB peak "
+                    f"per-pass scratch — the largest single sub-job "
+                    f"stage, not the pass total: each pass "
+                    f"materializes its array table and candidate set "
+                    f"so exchanges never coexist on disk "
+                    f"(machine-readable via plan_info)"
                 )
-            elif mode == "exact" and est_candidates == "prefix":
-                # round-10 optimization (guide §2.4, remove shuffles
-                # outright): prefix-light is EXACT — same PPJoin prefix
-                # theorem, output bit-identical to the window path
-                # (pytest-pinned, and ngram_jaccard_est_recall re-earns
-                # it every round) — with ONE gram-stream groupBy where
-                # the window path pays two full gram-stream sorts (df
-                # window over h + rank window over _id).  Measured 2.1×
-                # at sf0.1 (exact-window min 10.8 s vs prefix-light
-                # 5.1 s same-session).  "auto" therefore prefers it
-                # whenever the caller didn't pin a policy; the window
-                # path stays reachable via scratch_policy="exact" (the
-                # recall gauges' independently-structured truth side).
-                mode = "estimate"
-                auto_fits = True
-    else:
-        mode = _ngram_scratch_mode(scratch_policy, 0, 0)
-        light_exceeds = False
-    if mode == "sharded":
-        if resolved_shards is None or resolved_shards < 2:
-            raise ValueError(
-                f"scratch_policy='sharded' needs shards >= 2, got {resolved_shards!r}"
-            )
-        if plan_info is not None:
-            plan_info.update(
-                verify_mode="exact",
-                est_candidates=None,
-                est_bucket_cap=None,
-                loss_observed=loss_observation is not None,
-                light_scratch_exceeds=light_exceeds,
-                shards=resolved_shards,
-                candidate_mass_escalated=False,
-            )
+            else:
+                print(
+                    f"# ngram_jaccard_dedup: estimated prefix-light "
+                    f"scratch {light_need >> 30} GiB exceeds "
+                    f"{NGRAM_SCRATCH_HEADROOM:.0%} of free {free >> 30} GiB "
+                    f"on {local_dir}, and bounding it needs "
+                    f"{s_needed} > {NGRAM_MAX_SHARDS} doc shards — this "
+                    f"box may run out of shuffle disk; options: run on "
+                    f"a cluster, or opt into bounded-cost triage with "
+                    f"triage_cap=..."
+                )
+    info.update(
+        route=(
+            "sharded" if shards is not None
+            else "triage" if triage_cap is not None
+            else "prefix_light"
+        ),
+        shards=shards,
+        triage_cap=triage_cap,
+        light_scratch_exceeds=light_exceeds,
+    )
+    if shards is not None:
         try:
             return _ngram_jaccard_prefix_sharded(
                 base,
@@ -1667,114 +1494,26 @@ def ngram_jaccard_dedup(
                 length_band,
                 threshold,
                 n,
-                resolved_shards,
+                shards,
                 loss_observation=loss_observation,
-                plan_info=plan_info,
-                mass_policy=mass_policy,
-                mass_ceiling=mass_ceiling,
-                scratch_headroom=scratch_headroom,
+                plan_info=info,
+                escalate_above=escalate_above,
             )
         except _CandidateMassEscalation as esc:
-            cap = (
-                est_bucket_cap
-                if est_bucket_cap is not None
-                else NGRAM_TRIAGE_BUCKET_CAP
-            )
+            triage_cap = NGRAM_TRIAGE_BUCKET_CAP
             print(
                 f"# ngram_jaccard_dedup[sharded]: pass 0 verified-"
                 f"candidate count {esc.pass0_pairs:,} implies "
-                f"~{esc.est_total:,} total > ceiling {mass_ceiling:,}; "
-                f"mass_policy='triage' — abandoning the exact sharded "
+                f"~{esc.est_total:,} total > escalate_above "
+                f"{escalate_above:,} — abandoning the exact sharded "
                 f"run (scratch cleaned) and routing to char-minhash "
-                f"triage with est_bucket_cap={cap} + exact verify of "
+                f"triage with triage_cap={triage_cap} + exact verify of "
                 f"survivors; measured recall for this mode: "
                 f"ngram_jaccard_triage_recall (machine-readable via "
                 f"plan_info)"
             )
-            if plan_info is not None:
-                plan_info.update(
-                    verify_mode="estimate",
-                    est_candidates="char",
-                    est_bucket_cap=cap,
-                    loss_observed=loss_observation is not None,
-                    shards=None,
-                    candidate_mass_escalated=True,
-                )
-            grams = (
-                char_ngram_rows(base, F.lower(F.col("_txt")), n, keep=["_id"])
-                .select("_id", hash60(F.col("g")).alias("h"))
-                .distinct()
-            )
-            return _ngram_jaccard_minhash_verify(
-                grams,
-                meta,
-                block_cols,
-                length_band,
-                threshold,
-                NGRAM_EST_HASHES,
-                max_bucket_size=cap,
-                loss_observation=loss_observation,
-            )
-    grams = (
-        char_ngram_rows(base, F.lower(F.col("_txt")), n, keep=["_id"])
-        .select("_id", hash60(F.col("g")).alias("h"))
-        .distinct()
-    )
-    if plan_info is not None:
-        # auto_fits is the "auto"-routed prefix-light plan: STRUCTURALLY
-        # the estimate branch, semantically EXACT (PPJoin prefix theorem,
-        # bit-identical output) — report it as such so plan_info
-        # consumers never classify an exact run as a lossy sketch
-        # (round-10 advice: the first cut recorded verify_mode='estimate'
-        # / loss_observed=True here).
-        plan_info.update(
-            verify_mode="exact" if auto_fits else mode,
-            routed_prefix_light=auto_fits,
-            est_candidates=(
-                est_candidates if mode == "estimate" and not auto_fits else None
-            ),
-            est_bucket_cap=(
-                est_bucket_cap if mode == "estimate" and not auto_fits else None
-            ),
-            loss_observed=(
-                mode == "estimate"
-                and not auto_fits
-                and loss_observation is not None
-            ),
-            light_scratch_exceeds=light_exceeds,
-            shards=None,
-        )
-    if mode == "estimate":
-        # NOT persisted on the scratch-constrained path: the fallback
-        # consumes grams once per branch and caching the corpus-sized
-        # gram stream would re-create memory/disk pressure exactly where
-        # it matters.  When "auto" rerouted here with scratch to spare
-        # (auto_fits), persist: prefix-light reads grams twice (hot-df
-        # branch + array-collect branch) and the persist halves the
-        # shingle+distinct work (guide §5: reuse justifies the cache).
-        if auto_fits:
-            grams = grams.persist()
-        if est_candidates == "prefix":
-            return _ngram_jaccard_prefix_light(
-                grams,
-                meta,
-                block_cols,
-                length_band,
-                threshold,
-                loss_observation=loss_observation,
-            )
-        if est_candidates == "word":
-            return _ngram_jaccard_wordshingle_verify(
-                base,
-                grams,
-                meta,
-                block_cols,
-                length_band,
-                threshold,
-                NGRAM_EST_HASHES,
-                max_bucket_size=est_bucket_cap,
-                loss_observation=loss_observation,
-            )
+            info.update(route="triage", shards=None, triage_cap=triage_cap)
+    if triage_cap is not None:
         return _ngram_jaccard_minhash_verify(
             grams,
             meta,
@@ -1782,115 +1521,24 @@ def ngram_jaccard_dedup(
             length_band,
             threshold,
             NGRAM_EST_HASHES,
-            max_bucket_size=est_bucket_cap,
+            max_bucket_size=triage_cap,
             loss_observation=loss_observation,
         )
-    # exact mode: grams feeds doc sizes, the prefix index, and both
-    # verify sides — persist() makes the branches share one computation
-    # instead of re-running the explode+hash pipeline per consumer
-    # (lookup is by canonicalized plan, so repeated builder calls also
-    # reuse it)
-    grams = grams.persist()
-    cond = (F.col("id_a") < F.col("id_b")) & (
-        F.abs(F.col("len_a") - F.col("len_b")) <= length_band
+    if light_fits:
+        # prefix-light reads grams twice (hot-df branch + array-collect
+        # branch); the persist halves the shingle+distinct work.  Not
+        # persisted when the scratch model does not fit: caching the
+        # corpus-sized gram stream would add memory/disk pressure
+        # exactly where it matters.
+        grams = grams.persist()
+    return _ngram_jaccard_prefix_light(
+        grams,
+        meta,
+        block_cols,
+        length_band,
+        threshold,
+        loss_observation=loss_observation,
     )
-    for c in block_cols:
-        cond = cond & (F.col(f"{c}_a") == F.col(f"{c}_b"))
-    if prefix_filter:
-        from pyspark.sql import Window
-
-        # gram document-frequency as a window count over h — one shuffle
-        # of the gram stream, where a groupBy(h)+self-join would shuffle
-        # it twice (once into the agg, once into the join)
-        wh = Window.partitionBy("h")
-        wp = Window.partitionBy("_id")
-        # α = ⌈t·n⌉ with a tiny epsilon so float noise can only *lengthen*
-        # the prefix (shorter-than-exact prefixes would lose true pairs)
-        pref = (
-            grams.withColumn("df", F.count("*").over(wh))
-            .withColumn("rn", F.row_number().over(wp.orderBy("df", "h")))
-            .withColumn("ng", F.count("*").over(wp))
-            .filter(
-                F.col("rn")
-                <= F.col("ng")
-                - F.ceil(F.col("ng") * F.lit(threshold) - F.lit(1e-9))
-                + 1
-            )
-            .join(meta, "_id")
-        )
-        pa = pref.select(
-            F.col("_id").alias("id_a"),
-            *[F.col(c).alias(f"{c}_a") for c in block_cols],
-            F.col("_len").alias("len_a"),
-            F.col("ng").alias("na"),
-            "h",
-        )
-        pb = pref.select(
-            F.col("_id").alias("id_b"),
-            *[F.col(c).alias(f"{c}_b") for c in block_cols],
-            F.col("_len").alias("len_b"),
-            F.col("ng").alias("nb"),
-            "h",
-        )
-        size_cond = (
-            F.col("nb") >= F.col("na") * F.lit(threshold) - F.lit(1e-9)
-        ) & (F.col("na") >= F.col("nb") * F.lit(threshold) - F.lit(1e-9))
-        pairs = (
-            pa.join(pb, ["h"])
-            .filter(cond & size_cond)
-            .select("id_a", "id_b", "na", "nb")
-            .distinct()
-        )
-    else:
-        # per-doc gram counts only exist on this branch — the prefix path
-        # derives its own ng window count over the persisted gram stream
-        docs = (
-            grams.groupBy("_id")
-            .agg(F.count("*").alias("n_grams"))
-            .join(meta, "_id")
-        )
-        a = docs.select(
-            F.col("_id").alias("id_a"),
-            *[F.col(c).alias(f"{c}_a") for c in block_cols],
-            F.col("_len").alias("len_a"),
-            F.col("n_grams").alias("na"),
-        )
-        b = docs.select(
-            F.col("_id").alias("id_b"),
-            *[F.col(c).alias(f"{c}_b") for c in block_cols],
-            F.col("_len").alias("len_b"),
-            F.col("n_grams").alias("nb"),
-        )
-        pairs = a.join(b, cond).select("id_a", "id_b", "na", "nb")
-    # Verify: per-doc gram SETS as arrays, two joins to attach both sides,
-    # one array_intersect per pair (O(na+nb), JVM codegen).  This beats the
-    # exploded pairs×grams chain ~1.5× at sf0.1: the array table is small
-    # enough to hash- or broadcast-join (AQE decides), so no 10⁷-row
-    # intermediate is ever shuffled or sorted.  At 100 TB the array table
-    # is corpus-sized and these joins shuffle — but they carry the SAME
-    # bytes the exploded form would (one gram list per candidate side),
-    # packed one row per doc instead of one row per gram, so the array
-    # form is never worse.  (Round 1 measured array-verify 6× slower —
-    # that was BEFORE prefix filtering, when |pairs| was large enough that
-    # carrying arrays through a sort-merge join dominated; with PPJoin
-    # pruning + AQE hash-join conversion the tradeoff inverts.)
-    arrs = grams.groupBy("_id").agg(F.collect_list("h").alias("hs"))
-    inter = (
-        pairs.join(arrs.select(F.col("_id").alias("id_a"), F.col("hs").alias("ha")), "id_a")
-        .join(arrs.select(F.col("_id").alias("id_b"), F.col("hs").alias("hb")), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "na",
-            "nb",
-            F.size(F.array_intersect("ha", "hb")).cast("long").alias("both"),
-        )
-    )
-    return inter.select(
-        "id_a",
-        "id_b",
-        (F.col("both") / (F.col("na") + F.col("nb") - F.col("both"))).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
 
 
 def ngram_containment_dedup(

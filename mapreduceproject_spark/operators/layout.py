@@ -101,7 +101,7 @@ def layout_extents(
     sort of a few MB vs the two-phase plan's persist + two broadcast
     joins + offset window ≈ +1.2 s of pure stage overhead), above it the
     single task IS the bottleneck — same policy-by-size discipline as
-    ngram_jaccard_dedup's scratch resolver.  The one-column count that
+    ngram_jaccard_dedup's scratch-model routing.  The one-column count that
     picks the branch is the only eager action and costs a columnar scan.
     Both branches are bit-identical (the pytest pins the arithmetic
     against window NTILE), so the switch is invisible to the oracle.

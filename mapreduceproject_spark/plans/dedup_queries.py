@@ -314,7 +314,6 @@ def dedup_ngram_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=NGRAM_N,
         length_band=NGRAM_LEN_BAND,
         threshold=NGRAM_THR,
-        scratch_policy="sharded",
         shards=3,
     )
 
@@ -1084,22 +1083,17 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- ngram-jaccard fallback recall gauges (rounds 5-6) -----------------------
-# Round 5 shipped ONE gauge measuring the capped char-minhash fallback
-# (round-4 verdict: "explicitly lossy" must be a number, not an
-# adjective) — and the number was damning: production cap 256 kept
-# recall 0.041 on the 100× near-threshold corpus.  Round 6 replaced the
-# shipped default fallback with the EXACT prefix-light path
-# (operators/dedup.py::_ngram_jaccard_prefix_light — PPJoin under a
-# broadcast-df total order, one gram shuffle, recall 1.0 by theorem), so
-# there are now TWO gauges: ngram_jaccard_est_recall measures the
-# shipped default (expected 1.0 — a permanent regression guard on
-# whatever "auto" routes to), and ngram_jaccard_capped_recall keeps the
-# round-5 measurement of the capped char triage mode (cap 64: recall
-# ≈0.87 at sf0.01; cap 4: 0.02; the 100× production-cap number lives in
-# SCALING.md via scripts/scaling_run.py).  Both: exact truth over a
-# deterministic hash sample vs the fallback on the SAME sample, the
-# dedup_minhash_recall design.
+# -- ngram-jaccard recall gauges ---------------------------------------------
+# Exact truth over a deterministic hash sample (the blocked reference,
+# operators/dedup.py::_ngram_jaccard_blocked) vs ngram_jaccard_dedup on
+# the SAME sample, the dedup_minhash_recall design ("explicitly lossy"
+# must be a number, not an adjective).  ngram_jaccard_est_recall measures
+# the exact default plan (expected 1.0 — a permanent regression guard);
+# ngram_jaccard_capped_recall measures the capped char triage (cap 64:
+# recall ≈0.87 at sf0.01; cap 4: 0.02; production cap 256 kept 0.041 on
+# the 100× near-threshold corpus — SCALING.md via
+# scripts/scaling_run.py); ngram_jaccard_triage_recall measures the
+# escalate_above route into that triage.
 NGRAM_RECALL_PCT, NGRAM_RECALL_SALT, NGRAM_RECALL_CAP = 40, "|ng-recall", 64
 
 
@@ -1135,7 +1129,7 @@ def _ngram_truth_ctes() -> str:
 
 
 def _ngram_est_recall_oracle() -> str:
-    # The shipped default fallback is EXACT (prefix theorem), so the
+    # The default plan is EXACT (prefix theorem), so the
     # correct answer is detected ≡ truth — the oracle says so in SQL,
     # and the Spark side EARNS it by actually running both paths: any
     # lost pair shows up as n_detected < n_truth_pairs and fails parity.
@@ -1230,60 +1224,33 @@ def _ngram_capped_recall_oracle(
 def _ngram_recall_frame(
     spark: SparkSession,
     sf_dir: str,
-    est_candidates: str,
-    cap: int | None,
-    forced_triage_plan: dict | None = None,
+    detect: dict,
+    plan_info: dict | None = None,
 ) -> DataFrame:
-    """Shared gauge body: exact truth over the deterministic sample vs
-    the chosen fallback on the SAME sample, aggregated to (n_truth_pairs,
-    n_detected, recall).
-
-    ``forced_triage_plan`` (a dict) switches the detected side to the
-    SHARDED EXACT plan with ``mass_policy="triage"`` and ``mass_ceiling=-1``
-    — escalation is then guaranteed to fire at pass 0, the run re-routes
-    to the char-minhash triage, and the dict receives the operator's
-    plan_info so the caller can surface ``candidate_mass_escalated``
-    in-band (the routing itself becomes oracle-checkable)."""
+    """Shared gauge body: truth pairs from the blocked reference over the
+    deterministic sample vs ``ngram_jaccard_dedup(**detect)`` on the SAME
+    sample, aggregated to (n_truth_pairs, n_detected, recall).
+    ``plan_info`` receives the detected run's plan."""
     docs = load_table(spark, sf_dir, "documents")
     sample = docs.filter(
         hash60(F.concat(F.col("text"), F.lit(NGRAM_RECALL_SALT))) % 100
         < NGRAM_RECALL_PCT
     )
-
-    def run(policy: str, candidates: str | None = None, bucket_cap=None):
-        kwargs = dict(
-            block_cols=["lang"],
-            length_col="n_chars",
-            n=NGRAM_N,
-            length_band=NGRAM_LEN_BAND,
-            threshold=NGRAM_THR,
-            scratch_policy=policy,
-            est_candidates=candidates if candidates is not None else est_candidates,
-            est_bucket_cap=bucket_cap if bucket_cap is not None else cap,
-        )
-        if policy == "sharded":
-            kwargs.update(
-                shards=2,
-                mass_policy="triage",
-                mass_ceiling=-1,
-                plan_info=forced_triage_plan,
-            )
-        return dd.ngram_jaccard_dedup(sample, "doc_id", "text", **kwargs)
-
-    # Truth side: EXACT by the prefix theorem either way.  The est_recall
-    # gauge (est_candidates="prefix") keeps the window-sort "exact" mode
-    # so the shipped prefix-light plan is compared against an
-    # INDEPENDENTLY-STRUCTURED exact implementation; the char-mode gauges
-    # (capped/triage) measure the CHAR sketch's loss, for which the
-    # prefix-light exact plan is an equally valid — and ~2× cheaper
-    # (round-10 measurement, guide §2.4) — truth: its equality to window
-    # mode is re-earned end-to-end every round by est_recall, and the
-    # DuckDB oracle recomputes this truth from scratch regardless.
-    truth_policy = "exact" if est_candidates == "prefix" else "estimate"
-    truth = run(truth_policy, candidates="prefix").select("id_a", "id_b")
-    det = run("sharded" if forced_triage_plan is not None else "estimate").select(
-        F.col("id_a").alias("da"), F.col("id_b").alias("db")
+    kw = dict(
+        block_cols=["lang"],
+        length_col="n_chars",
+        n=NGRAM_N,
+        length_band=NGRAM_LEN_BAND,
+        threshold=NGRAM_THR,
     )
+    # the blocked cross-product shares no candidate logic with either
+    # detected plan, and the sample keeps its quadratic blocks small
+    truth = dd._ngram_jaccard_blocked(sample, "doc_id", "text", **kw).select(
+        "id_a", "id_b"
+    )
+    det = dd.ngram_jaccard_dedup(
+        sample, "doc_id", "text", plan_info=plan_info, **detect, **kw
+    ).select(F.col("id_a").alias("da"), F.col("id_b").alias("db"))
     joined = truth.join(
         det, (F.col("id_a") == F.col("da")) & (F.col("id_b") == F.col("db")), "left"
     )
@@ -1301,38 +1268,36 @@ def _ngram_recall_frame(
 
 @query("ngram_jaccard_est_recall", oracle=_ngram_est_recall_oracle())
 def ngram_jaccard_est_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall gauge for ngram_jaccard_dedup's SHIPPED default fallback
-    (est_candidates="prefix"): exact-truth pairs over a deterministic
-    {NGRAM_RECALL_PCT}% hash sample vs the same sample through the
-    prefix-light path.  The fallback is exact by the PPJoin prefix
-    theorem, so the expected recall is exactly 1.0 — this gauge is the
-    permanent regression guard that EARNS that claim by running both
-    paths end-to-end every round (a lost pair fails oracle parity, not
-    just a docstring).
+    """Recall gauge for ngram_jaccard_dedup's default plan: blocked-
+    reference truth pairs over a deterministic {NGRAM_RECALL_PCT}% hash
+    sample vs the same sample through the default route (prefix-light).
+    The plan is exact by the PPJoin prefix theorem, so the expected
+    recall is exactly 1.0 — this gauge is the permanent regression guard
+    that EARNS that claim by running both plans end-to-end (a lost pair
+    fails oracle parity, not just a docstring).
 
-    Scale shape: both sides reuse the production operator on the sample;
-    the sample percentage is the budget knob (exact truth is the bounded
-    part, same contract as dedup_minhash_recall)."""
-    return _ngram_recall_frame(spark, sf_dir, "prefix", None)
+    Scale shape: the sample percentage is the budget knob (the blocked
+    truth is the bounded part, same contract as dedup_minhash_recall)."""
+    return _ngram_recall_frame(spark, sf_dir, {})
 
 
 @query("ngram_jaccard_capped_recall", oracle=_ngram_capped_recall_oracle())
 def ngram_jaccard_capped_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall gauge for the capped char-minhash TRIAGE mode
-    (est_candidates="char", est_bucket_cap={NGRAM_RECALL_CAP}): the
-    forfeited-pairs rate of the saturated-bucket drop as a measured
-    number, not a docstring (round-5's gauge, kept under its own name
-    after the shipped default became the exact prefix-light path).
+    (triage_cap={NGRAM_RECALL_CAP}): the forfeited-pairs rate of the
+    saturated-bucket drop as a measured number, not a docstring.
     Precision is 1.0 by construction (every candidate is exact-verified
     at the same threshold), so recall alone characterizes the cap's
     loss; the same loss is machine-readable in-band per run via
     ngram_jaccard_dedup's loss_observation.
 
-    The two modes need structurally different gram pipelines (window
-    sorts vs signature folds), so unlike the minhash gauge the pipelines
-    aren't shared — the gauge costs ~2x one dedup pass over the
-    sample."""
-    return _ngram_recall_frame(spark, sf_dir, "char", NGRAM_RECALL_CAP)
+    The truth and triage sides need structurally different gram
+    pipelines (blocked cross-product vs signature folds), so unlike the
+    minhash gauge the pipelines aren't shared — the gauge costs ~2x one
+    dedup pass over the sample."""
+    return _ngram_recall_frame(
+        spark, sf_dir, {"triage_cap": NGRAM_RECALL_CAP}
+    )
 
 
 @query(
@@ -1343,8 +1308,8 @@ def ngram_jaccard_capped_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def ngram_jaccard_triage_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall gauge for the mass_policy="triage" ESCALATION path (round
-    9): the sharded exact plan is launched with a forced ceiling so its
+    """Recall gauge for the ``escalate_above`` ESCALATION path: the
+    sharded exact plan is launched with ``escalate_above=-1`` so its
     pass-0 candidate-mass checkpoint fires, abandons the exact run, and
     re-routes to char-minhash triage (cap {dd.NGRAM_TRIAGE_BUCKET_CAP})
     with exact verification of survivors.  The oracle replicates the
@@ -1352,8 +1317,8 @@ def ngram_jaccard_triage_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     so BOTH the routing decision and the routed mode's values are
     earned end-to-end: if escalation fails to fire, the detected side
     comes from the exact plan, n_detected exceeds the capped oracle's,
-    and the escalated literal (read from the operator's plan_info)
-    flips FALSE.
+    and the escalated literal (``route == "triage"`` in the operator's
+    plan_info) flips FALSE.
 
     This is the measured answer to "what do I lose if the exact-regime
     announcement routes me to triage at 100 TB": recall at the
@@ -1361,13 +1326,13 @@ def ngram_jaccard_triage_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     plan: dict = {}
     frame = _ngram_recall_frame(
-        spark, sf_dir, "char", None, forced_triage_plan=plan
+        spark, sf_dir, {"shards": 2, "escalate_above": -1}, plan_info=plan
     )
     # plan_info fills driver-side at build time (the escalation happens
     # eagerly inside the sharded driver), so the literal is already the
     # real routing decision, not a placeholder
     return frame.select(
-        "*", F.lit(bool(plan.get("candidate_mass_escalated"))).alias("escalated")
+        "*", F.lit(plan.get("route") == "triage").alias("escalated")
     )
 
 

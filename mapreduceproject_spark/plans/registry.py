@@ -94,7 +94,7 @@ ORACLES: dict[str, str] = {}
 #   1-2:   NEW this round (first wave), never driver-run:
 #          customer_rfm_approx (the exact query's approx-ntile
 #          production twin) and ngram_jaccard_triage_recall (the
-#          mass_policy="triage" escalation gauge — routing +
+#          escalate_above triage-escalation gauge — routing +
 #          routed-mode values).
 #   3-9:   NEW this round (second wave), never driver-run:
 #          embedding_redundant_dims (Arrow Gram-kernel dimension-pair

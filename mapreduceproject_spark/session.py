@@ -31,7 +31,10 @@ Spark classes the driver JVM loaded, never data, plans or results.
   runs, its ``lib/modules``, the archive directory and the
   ``$SPARK_HOME/jars`` listing.
 - Written: when none exists, the JVM writes one at exit with
-  ``-XX:ArchiveClassesAtExit`` to a per-pid temp name.  Once that JVM has
+  ``-XX:ArchiveClassesAtExit`` to a per-pid temp name, created empty at
+  launch to mark the write in progress; a session that finds a live
+  process's temp file for the same key starts without an archive, so
+  concurrent first sessions write one archive, not one each.  Once that JVM has
   exited with status 0, the file is renamed to ``<key>-<bytes>.jsa``, and
   other archives and dead-pid temp files are deleted.  That run's exit
   takes about 10 s longer; the archive takes about 150 MB of disk.  An
@@ -135,6 +138,10 @@ def get_spark(
     os.environ["SPARK_CONF_DIR"] = str(CDS_DIR / "conf")
     try:
         spark = builder.getOrCreate()
+    except BaseException:
+        if dump is not None:
+            dump.unlink(missing_ok=True)
+        raise
     finally:
         if saved is None:
             del os.environ["SPARK_CONF_DIR"]
@@ -199,7 +206,15 @@ def _cds_launch(conf: dict[str, str]) -> tuple[str, Path | None] | None:
         if _valid(f):
             return f"-XX:SharedArchiveFile={f} {_CDS_LOG}", None
         f.unlink(missing_ok=True)
+    for f in CDS_DIR.glob(f"{key}.*.tmp"):
+        pid = f.name.split(".")[1]
+        if pid.isdigit() and _alive(int(pid)):
+            return None  # a live process is writing this key's archive
+        f.unlink(missing_ok=True)
+    # the placeholder marks the write in progress until the JVM replaces
+    # it with the archive at exit
     tmp = CDS_DIR / f"{key}.{os.getpid()}.tmp"
+    tmp.touch()
     return f"-XX:ArchiveClassesAtExit={tmp} {_CDS_LOG}", tmp
 
 
@@ -219,10 +234,11 @@ def _publish() -> None:
         if proc.poll() is None:
             continue
         _dumps.remove(entry)
-        if proc.returncode != 0 or not tmp.is_file():
+        size = tmp.stat().st_size if tmp.is_file() else 0
+        if proc.returncode != 0 or size == 0:
             tmp.unlink(missing_ok=True)
             continue
-        final = tmp.with_name(f"{tmp.name.split('.')[0]}-{tmp.stat().st_size}.jsa")
+        final = tmp.with_name(f"{tmp.name.split('.')[0]}-{size}.jsa")
         os.replace(tmp, final)
         for f in CDS_DIR.glob("*.jsa"):
             if f != final:

@@ -387,12 +387,10 @@ def mg_throughput_check(spark) -> dict:
 
 def ngram_scratch_check(spark) -> dict:
     """dedup_ngram_jaccard end-to-end at the scaled fixture under the
-    default scratch policy: 'auto' must pick the scratch-light fallback
-    when the exact path's estimated scratch exceeds free disk (the
-    round-3 100× DNF) and complete.  Since round 6 the default fallback
-    is the EXACT prefix-light path (no cap, no recall trade); the
-    resolved plan is read from plan_info, the machine-readable channel
-    that replaced the stdout grep."""
+    default options: the exact prefix-light plan runs single-pass, or in
+    doc-sharded passes when its estimated scratch exceeds free disk, and
+    completes.  The resolved plan is read from plan_info, the
+    machine-readable channel that replaced the stdout grep."""
     import time
 
     from mapreduceproject_spark.operators.dedup import ngram_jaccard_dedup
@@ -413,8 +411,7 @@ def ngram_scratch_check(spark) -> dict:
     ).write.format("noop").mode("overwrite").save()
     return {
         "sec": round(time.perf_counter() - t0, 2),
-        "mode": info.get("verify_mode"),
-        "est_candidates": info.get("est_candidates"),
+        "route": info.get("route"),
         "shards": info.get("shards"),
     }
 
@@ -490,13 +487,12 @@ def semantic_autok_check(spark) -> dict:
 
 
 def ngram_recall_check(spark) -> dict:
-    """Fallback recall at the scaled corpus: exact truth over a
-    deterministic hash sample vs (a) the SHIPPED default fallback
-    (est_candidates='prefix' — exact by theorem, so anything below 1.0
-    is a bug) and (b) the capped char-minhash triage mode at the
-    production cap 256 (the round-5 measured 0.041 cliff, kept for the
-    record).  The sample percentage bounds the exact side's shuffle
-    scratch (the full 100x exact pass is the documented DNF); 20%% keeps
+    """n-gram recall at the scaled corpus: blocked-reference truth over a
+    deterministic hash sample vs (a) the default plan (prefix-light —
+    exact by theorem, so anything below 1.0 is a bug) and (b) the capped
+    char-minhash triage at the production cap 256 (the measured 100x
+    0.041 cliff, kept for the record).  The sample percentage bounds the
+    truth side's pair work, which is quadratic per block; 20%% keeps
     it ~1/25th of the full pair work at <=100x, and past that the sample
     holds a FIXED ABSOLUTE size (the same contract dedup_minhash_recall
     documents: a gauge's exact-truth side is budgeted in documents, not
@@ -507,7 +503,10 @@ def ngram_recall_check(spark) -> dict:
     from pyspark.sql import functions as F
 
     from mapreduceproject_spark.functions.hashing import hash60
-    from mapreduceproject_spark.operators.dedup import ngram_jaccard_dedup
+    from mapreduceproject_spark.operators.dedup import (
+        _ngram_jaccard_blocked,
+        ngram_jaccard_dedup,
+    )
 
     pct = 20 if REPLICAS <= 100 else max(1, 2000 // REPLICAS)
     salt, cap = "|ng-recall", 256
@@ -516,21 +515,21 @@ def ngram_recall_check(spark) -> dict:
         hash60(F.concat(F.col("text"), F.lit(salt))) % 100 < pct
     )
 
-    def run(policy, candidates, bucket_cap):
-        return ngram_jaccard_dedup(
-            sample, "doc_id", "text", block_cols=["lang"],
-            length_col="n_chars", n=3, length_band=8, threshold=0.55,
-            scratch_policy=policy, est_candidates=candidates,
-            est_bucket_cap=bucket_cap,
-        )
-
+    kw = dict(
+        block_cols=["lang"], length_col="n_chars", n=3, length_band=8,
+        threshold=0.55,
+    )
     t0 = time.perf_counter()
-    truth = run("exact", "prefix", None).select("id_a", "id_b").persist()
+    truth = (
+        _ngram_jaccard_blocked(sample, "doc_id", "text", **kw)
+        .select("id_a", "id_b")
+        .persist()
+    )
     n_truth = truth.count()
 
-    def recall_of(candidates, bucket_cap):
+    def recall_of(**opts):
         t1 = time.perf_counter()
-        det = run("estimate", candidates, bucket_cap).select(
+        det = ngram_jaccard_dedup(sample, "doc_id", "text", **opts, **kw).select(
             F.col("id_a").alias("da"), F.col("id_b").alias("db")
         )
         n_det = truth.join(
@@ -546,8 +545,8 @@ def ngram_recall_check(spark) -> dict:
     out = {
         "sample_pct": pct,
         "n_truth_pairs": n_truth,
-        "default_prefix": recall_of("prefix", None),
-        "char_capped": dict(est_bucket_cap=cap, **recall_of("char", cap)),
+        "default_prefix": recall_of(),
+        "char_capped": dict(triage_cap=cap, **recall_of(triage_cap=cap)),
         "sec": round(time.perf_counter() - t0, 2),
     }
     truth.unpersist()

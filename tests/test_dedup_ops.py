@@ -291,45 +291,58 @@ def test_star_cc_converges_where_diameter_bound_fails(spark):
     )
 
 
+_NGRAM_KW = dict(
+    block_cols=["lang"], length_col="n_chars", n=3, length_band=8,
+    threshold=0.55,
+)
+
+
+def _ngram_pairs(df):
+    return {
+        (r["id_a"], r["id_b"], round(r["jaccard"], 9)) for r in df.collect()
+    }
+
+
+def _ngram_truth(docs):
+    """The independent truth: every blocked pair verified, no prefix
+    filter."""
+    return _ngram_pairs(dd._ngram_jaccard_blocked(docs, "doc_id", "text", **_NGRAM_KW))
+
+
 def test_ngram_estimate_mode_matches_exact_pairs(spark, sf_dir):
-    """The shipped fallback (est_candidates="prefix") is EXACT: same
-    PPJoin prefix theorem as the window path under a different total
-    order, so pairs AND jaccard values must be identical — not
-    probabilistically close, bit-identical."""
+    """The default plan (prefix-light) is EXACT: PPJoin's prefix theorem
+    holds under any total order, so pairs AND jaccard values must equal
+    the blocked cross-product's — not probabilistically close,
+    bit-identical — and the attached observation reports zero drops."""
     from pyspark.sql import Observation
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    kw = dict(
-        block_cols=["lang"], length_col="n_chars", n=3, length_band=8,
-        threshold=0.55,
+    truth = _ngram_truth(docs)
+    obs = Observation()
+    got = _ngram_pairs(
+        dd.ngram_jaccard_dedup(
+            docs, "doc_id", "text", loss_observation=obs, **_NGRAM_KW
+        )
     )
-    exact = {
-        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in dd.ngram_jaccard_dedup(
-            docs, "doc_id", "text", scratch_policy="exact", **kw
-        ).collect()
-    }
-    obs, info = Observation(), {}
-    est = {
-        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in dd.ngram_jaccard_dedup(
-            docs, "doc_id", "text", scratch_policy="estimate",
-            loss_observation=obs, plan_info=info, **kw
-        ).collect()
-    }
-    assert exact and est == exact
-    # the in-band contract: plan resolved driver-side, zero loss observed
+    assert truth and got == truth
+    assert obs.get["bucket_rows_dropped"] == 0 and obs.get["bucket_rows_total"] > 0
+
+
+def test_ngram_auto_prefix_light_plan_info_reports_exact(spark, sf_dir):
+    """With no options the plan resolves driver-side, before any pair
+    job, to the exact prefix-light route — plan_info names the route and
+    carries no triage cap, so a consumer never classifies an exact run
+    as a lossy sketch."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    info = {}
+    out = dd.ngram_jaccard_dedup(docs, "doc_id", "text", plan_info=info, **_NGRAM_KW)
     assert info == {
-        "verify_mode": "estimate",
-        "routed_prefix_light": False,
-        "est_candidates": "prefix",
-        "est_bucket_cap": None,
-        "loss_observed": True,
-        "light_scratch_exceeds": False,
+        "route": "prefix_light",
         "shards": None,
+        "triage_cap": None,
+        "light_scratch_exceeds": False,
     }
-    got = obs.get
-    assert got["bucket_rows_dropped"] == 0 and got["bucket_rows_total"] > 0
+    assert out.count() > 0
 
 
 def test_ngram_char_cap_loss_is_machine_readable(spark, sf_dir):
@@ -342,84 +355,74 @@ def test_ngram_char_cap_loss_is_machine_readable(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     obs, info = Observation(), {}
     out = dd.ngram_jaccard_dedup(
-        docs, "doc_id", "text",
-        block_cols=["lang"], length_col="n_chars", n=3, length_band=8,
-        threshold=0.55, scratch_policy="estimate", est_candidates="char",
-        est_bucket_cap=50, loss_observation=obs, plan_info=info,
+        docs, "doc_id", "text", triage_cap=50, loss_observation=obs,
+        plan_info=info, **_NGRAM_KW,
     )
     out.collect()
     got = obs.get
     assert got["bucket_rows_dropped"] > 0
     assert got["bucket_rows_total"] >= got["bucket_rows_dropped"]
-    assert info["est_candidates"] == "char" and info["est_bucket_cap"] == 50
+    assert info["route"] == "triage" and info["triage_cap"] == 50
 
 
 def test_ngram_exact_mode_plan_info_and_bad_candidates(spark, sf_dir):
-    """plan_info records exact mode (no loss observation attached), and
-    an unknown est_candidates value raises instead of silently running
-    some default."""
+    """Option combinations that have no plan raise up front instead of
+    silently running some default: a single shard, a triage cap next to
+    shards or escalate_above (triage is its own route), and a
+    non-positive cap."""
     import pytest
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    kw = dict(
-        block_cols=["lang"], length_col="n_chars", n=3, length_band=8,
-        threshold=0.55,
-    )
-    info = {}
-    dd.ngram_jaccard_dedup(
-        docs, "doc_id", "text", scratch_policy="exact", plan_info=info, **kw
-    )
-    assert info == {
-        "verify_mode": "exact",
-        "routed_prefix_light": False,
-        "est_candidates": None,
-        "est_bucket_cap": None,
-        "loss_observed": False,
-        "light_scratch_exceeds": False,
-        "shards": None,
-    }
-    with pytest.raises(ValueError, match="est_candidates"):
-        dd.ngram_jaccard_dedup(
-            docs, "doc_id", "text", est_candidates="yolo", **kw
-        )
+    for bad, match in (
+        (dict(shards=1), "shards must be >= 2"),
+        (dict(shards=0), "shards must be >= 2"),
+        (dict(triage_cap=64, shards=2), "triage_cap combines"),
+        (dict(triage_cap=64, escalate_above=10), "triage_cap combines"),
+        (dict(triage_cap=0), "triage_cap must be >= 1"),
+    ):
+        with pytest.raises(ValueError, match=match):
+            dd.ngram_jaccard_dedup(docs, "doc_id", "text", **bad, **_NGRAM_KW)
 
 
 def test_ngram_estimate_bucket_cap_is_bounded_subset(spark, sf_dir):
-    """est_bucket_cap is the estimate mode's viral-bucket valve: capped
-    output must be a SUBSET of uncapped (it only drops pairs whose every
-    shared-minimum bucket is saturated), a huge cap must be a no-op, and
-    a tiny cap must actually shrink the pair set on this fixture (whose
-    background char-trigram similarity concentrates ~80% of docs into
-    one bucket per band — the measured 341 M-candidate shape at 100×)."""
+    """triage_cap is the triage mode's viral-bucket valve: a cap above
+    every bucket drops nothing, capped output must be a SUBSET of that
+    (it only drops pairs whose every shared-minimum bucket is saturated)
+    and of the exact truth, and a tiny cap must actually shrink the pair
+    set on this fixture (whose background char-trigram similarity
+    concentrates ~80% of docs into one bucket per band — the measured
+    341 M-candidate shape at 100×)."""
+    from pyspark.sql import Observation
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    kw = dict(
-        block_cols=["lang"], length_col="n_chars", n=3, length_band=8,
-        threshold=0.55, scratch_policy="estimate", est_candidates="char",
-    )
 
-    def pairs(cap):
-        return {
-            (r["id_a"], r["id_b"])
-            for r in dd.ngram_jaccard_dedup(
-                docs, "doc_id", "text", est_bucket_cap=cap, **kw
-            ).collect()
-        }
+    def pairs(cap, obs=None):
+        return _ngram_pairs(
+            dd.ngram_jaccard_dedup(
+                docs, "doc_id", "text", triage_cap=cap, loss_observation=obs,
+                **_NGRAM_KW,
+            )
+        )
 
-    uncapped = pairs(None)
-    assert pairs(10**9) == uncapped
+    obs = Observation()
+    uncapped = pairs(10**9, obs)
+    assert obs.get["bucket_rows_dropped"] == 0
+    assert uncapped <= _ngram_truth(docs)
     capped = pairs(50)
     assert capped <= uncapped
     assert len(capped) < len(uncapped)
 
 
-def test_ngram_auto_announces_light_scratch_overrun(spark, sf_dir, monkeypatch):
-    """When even the prefix-light fallback's scratch estimate exceeds the
-    headroom AND bounding it would need more than NGRAM_MAX_SHARDS doc
-    shards (free=1 byte forces an astronomical shard count), auto must
-    still run the lightest exact mode but SAY so machine-readably up
+def test_ngram_auto_announces_light_scratch_overrun(
+    spark, sf_dir, monkeypatch, capsys
+):
+    """When the prefix-light scratch estimate exceeds the headroom AND
+    bounding it would need more than NGRAM_MAX_SHARDS doc shards
+    (free=1 byte forces an astronomical shard count), the default still
+    runs the exact single-pass plan but SAYS so machine-readably up
     front — the caller decides between a cluster and explicit lossy
-    triage.  (When a sane shard count suffices, auto routes to the
-    sharded exact plan instead — test_ngram_auto_routes_to_sharded.)"""
+    triage.  (When a sane shard count suffices, the sharded plan runs
+    instead — test_ngram_auto_routes_to_sharded.)"""
     import collections
     import shutil as _shutil
 
@@ -428,45 +431,49 @@ def test_ngram_auto_announces_light_scratch_overrun(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(dd, "NGRAM_SCRATCH_FLOOR_BYTES", 0)
     monkeypatch.setattr(_shutil, "disk_usage", lambda p: du(2, 1, 1))
     info = {}
-    out = dd.ngram_jaccard_dedup(
-        docs, "doc_id", "text",
-        block_cols=["lang"], length_col="n_chars", n=3, length_band=8,
-        threshold=0.55, scratch_policy="auto", plan_info=info,
-    )
-    assert info["verify_mode"] == "estimate"
-    assert info["est_candidates"] == "prefix"
+    out = dd.ngram_jaccard_dedup(docs, "doc_id", "text", plan_info=info, **_NGRAM_KW)
+    assert info["route"] == "prefix_light" and info["shards"] is None
     assert info["light_scratch_exceeds"] is True
+    assert "triage_cap=" in capsys.readouterr().out
     assert out.count() > 0  # the warning is advisory: fixture-scale completes
+
+
+def test_ngram_routing_below_floor_never_shards(spark, sf_dir, monkeypatch, capsys):
+    """Below NGRAM_SCRATCH_FLOOR_BYTES the default never reroutes, even
+    with zero free bytes: a few GiB of scratch is affordable anywhere,
+    and the registered query's plan must not depend on a crowded host's
+    free disk."""
+    import collections
+    import shutil as _shutil
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    du = collections.namedtuple("du", "total used free")
+    monkeypatch.setattr(_shutil, "disk_usage", lambda p: du(1, 1, 0))
+    info = {}
+    dd.ngram_jaccard_dedup(docs, "doc_id", "text", plan_info=info, **_NGRAM_KW)
+    assert info["route"] == "prefix_light" and info["shards"] is None
+    # the model does exceed 0 free bytes; only the floor keeps it single-pass
+    assert info["light_scratch_exceeds"] is True
+    assert "# ngram_jaccard_dedup" not in capsys.readouterr().out
 
 
 def test_ngram_sharded_exact_matches_exact(spark, sf_dir):
     """The doc-sharded plan is EXACT: pairs and jaccards bit-equal to
-    single-pass exact mode at several shard counts (2 hits the minimum,
+    the blocked truth at several shard counts (2 hits the minimum,
     3 exercises both diagonal and off-diagonal passes, 7 leaves some
     shards near-empty), and plan_info records the resolved plan."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    kw = dict(
-        block_cols=["lang"], length_col="n_chars", n=3, length_band=8,
-        threshold=0.55,
-    )
-    exact = {
-        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in dd.ngram_jaccard_dedup(
-            docs, "doc_id", "text", scratch_policy="exact", **kw
-        ).collect()
-    }
-    assert exact
+    truth = _ngram_truth(docs)
+    assert truth
     for s in (2, 3, 7):
         info = {}
-        got = {
-            (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-            for r in dd.ngram_jaccard_dedup(
-                docs, "doc_id", "text", scratch_policy="sharded",
-                shards=s, plan_info=info, **kw
-            ).collect()
-        }
-        assert got == exact, f"shards={s} diverged from exact"
-        assert info["verify_mode"] == "exact" and info["shards"] == s
+        got = _ngram_pairs(
+            dd.ngram_jaccard_dedup(
+                docs, "doc_id", "text", shards=s, plan_info=info, **_NGRAM_KW
+            )
+        )
+        assert got == truth, f"shards={s} diverged from the blocked truth"
+        assert info["route"] == "sharded" and info["shards"] == s
         # the candidate-mass checkpoint measures pass 0 and extrapolates
         # by pass-space fraction (diagonal pass covers 1/s^2)
         assert info["pass0_candidate_pairs"] >= 0
@@ -475,35 +482,46 @@ def test_ngram_sharded_exact_matches_exact(spark, sf_dir):
             == info["pass0_candidate_pairs"] * s * s
         )
 
-    import pytest
 
-    with pytest.raises(ValueError, match="shards >= 2"):
-        dd.ngram_jaccard_dedup(
-            docs, "doc_id", "text", scratch_policy="sharded", shards=1, **kw
+def test_sharded_staged_mode_still_exact(spark, sf_dir, monkeypatch):
+    """The adaptive decision un-stages fixture-scale passes, so the
+    STAGED branch (the 1000x disk fix) keeps explicit coverage: zeroing
+    the floor and the headroom forces it; staged output must equal
+    unstaged output and plan_info must say which form ran."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+    def run(force_staged: bool):
+        if force_staged:
+            monkeypatch.setattr(dd, "NGRAM_SCRATCH_FLOOR_BYTES", 0)
+            monkeypatch.setattr(dd, "NGRAM_SCRATCH_HEADROOM", 0.0)
+        info: dict = {}
+        rows = _ngram_pairs(
+            dd.ngram_jaccard_dedup(
+                docs, "doc_id", "text", shards=3, plan_info=info, **_NGRAM_KW
+            )
         )
+        monkeypatch.undo()
+        return rows, info
+
+    staged_rows, staged_info = run(True)
+    plain_rows, plain_info = run(False)
+    assert staged_info["pass_staging"] is True
+    assert plain_info["pass_staging"] is False
+    assert staged_rows == plain_rows and plain_rows
 
 
 def test_ngram_auto_routes_to_sharded(spark, sf_dir, monkeypatch):
     """The 1000x closure: when prefix-light's scratch estimate exceeds
-    the headroom but a sane shard count bounds it, auto runs the EXACT
-    doc-sharded plan (not the single-pass gamble, not lossy triage) and
-    the output still equals exact mode."""
+    the headroom but a sane shard count bounds it, the default runs the
+    EXACT doc-sharded plan (not the single-pass gamble, not lossy
+    triage) and the output still equals the blocked truth."""
     import collections
     import shutil as _shutil
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    kw = dict(
-        block_cols=["lang"], length_col="n_chars", n=3, length_band=8,
-        threshold=0.55,
-    )
-    exact = {
-        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in dd.ngram_jaccard_dedup(
-            docs, "doc_id", "text", scratch_policy="exact", **kw
-        ).collect()
-    }
     from pyspark.sql import functions as F
 
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    truth = _ngram_truth(docs)
     light_need = 48 * docs.agg(F.sum("n_chars")).collect()[0][0]
     du = collections.namedtuple("du", "total used free")
     monkeypatch.setattr(dd, "NGRAM_SCRATCH_FLOOR_BYTES", 0)
@@ -512,35 +530,13 @@ def test_ngram_auto_routes_to_sharded(spark, sf_dir, monkeypatch):
         _shutil, "disk_usage", lambda p: du(light_need * 2, light_need, light_need)
     )
     info = {}
-    got = {
-        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in dd.ngram_jaccard_dedup(
-            docs, "doc_id", "text", scratch_policy="auto", plan_info=info, **kw
-        ).collect()
-    }
-    assert got == exact
-    assert info["verify_mode"] == "exact"
+    got = _ngram_pairs(
+        dd.ngram_jaccard_dedup(docs, "doc_id", "text", plan_info=info, **_NGRAM_KW)
+    )
+    assert got == truth
+    assert info["route"] == "sharded"
     assert info["shards"] == 4
     assert info["light_scratch_exceeds"] is True
-
-
-def test_ngram_scratch_policy_resolution():
-    """Pure decision function: explicit policies pass through; auto
-    switches to estimate exactly when need > headroom * free AND the
-    need clears the small-corpus floor (below the floor, exact is
-    affordable anywhere and the registered query's algorithm must not
-    depend on a crowded host's free disk)."""
-    import pytest
-
-    floor = dd.NGRAM_SCRATCH_FLOOR_BYTES
-    assert dd._ngram_scratch_mode("exact", 10**15, 1, 0.5) == "exact"
-    assert dd._ngram_scratch_mode("estimate", 0, 10**15, 0.5) == "estimate"
-    assert dd._ngram_scratch_mode("auto", floor + 49, floor * 2 + 100, 0.5) == "exact"
-    assert dd._ngram_scratch_mode("auto", floor + 51, 100, 0.5) == "estimate"
-    # below the floor auto NEVER falls back, even with zero free bytes
-    assert dd._ngram_scratch_mode("auto", floor - 1, 0, 0.5) == "exact"
-    with pytest.raises(ValueError):
-        dd._ngram_scratch_mode("yolo", 0, 0)
 
 
 def test_star_cc_raises_when_max_iter_exhausted(spark):
@@ -738,62 +734,50 @@ def test_ngram_containment_matches_bruteforce(spark, sf_dir):
     assert want and got == want
 
 
-def test_ngram_mass_triage_escalation_contract(spark, sf_dir):
-    """mass_policy="triage" (round 9): past the ceiling the sharded
-    exact run is abandoned at the pass-0 checkpoint (before its verify
-    join is scheduled) and re-routes to the char-minhash triage with
-    exact verify — output bit-equal to calling that mode directly at the
-    same cap, plan_info records the routing; the default "proceed"
-    keeps the exact output past the same ceiling; an unknown
-    mass_policy raises."""
-    import pytest
-
+def test_ngram_mass_triage_escalation_contract(spark, sf_dir, monkeypatch, capsys):
+    """escalate_above: past it the sharded exact run is abandoned at the
+    pass-0 checkpoint (before its verify join is scheduled) and re-routes
+    to the char-minhash triage with exact verify — output bit-equal to
+    calling triage directly at NGRAM_TRIAGE_BUCKET_CAP, plan_info records
+    the routing.  Below it, or with the default None past
+    NGRAM_EXACT_CANDIDATE_CEILING (announced on stdout), the sharded run
+    proceeds and stays exact."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    kw = dict(
-        block_cols=["lang"], length_col="n_chars", n=3, length_band=8,
-        threshold=0.55,
-    )
-
-    def pairs(df):
-        return {
-            (r["id_a"], r["id_b"], round(r["jaccard"], 9)) for r in df.collect()
-        }
-
-    direct = pairs(
+    direct = _ngram_pairs(
         dd.ngram_jaccard_dedup(
-            docs, "doc_id", "text", scratch_policy="estimate",
-            est_candidates="char", est_bucket_cap=dd.NGRAM_TRIAGE_BUCKET_CAP,
-            **kw,
+            docs, "doc_id", "text", triage_cap=dd.NGRAM_TRIAGE_BUCKET_CAP,
+            **_NGRAM_KW,
         )
     )
     info = {}
-    escalated = pairs(
+    escalated = _ngram_pairs(
         dd.ngram_jaccard_dedup(
-            docs, "doc_id", "text", scratch_policy="sharded", shards=2,
-            mass_policy="triage", mass_ceiling=-1, plan_info=info, **kw,
+            docs, "doc_id", "text", shards=2, escalate_above=-1,
+            plan_info=info, **_NGRAM_KW,
         )
     )
     assert escalated == direct and direct
-    assert info["candidate_mass_escalated"] is True
-    assert info["verify_mode"] == "estimate"
-    assert info["est_candidates"] == "char"
-    assert info["est_bucket_cap"] == dd.NGRAM_TRIAGE_BUCKET_CAP
+    assert info["route"] == "triage" and info["shards"] is None
+    assert info["triage_cap"] == dd.NGRAM_TRIAGE_BUCKET_CAP
     assert info["est_total_candidate_pairs"] > -1  # checkpoint recorded
 
-    exact = pairs(
-        dd.ngram_jaccard_dedup(docs, "doc_id", "text", scratch_policy="exact", **kw)
-    )
+    truth = _ngram_truth(docs)
     info2 = {}
-    proceed = pairs(
+    below = _ngram_pairs(
         dd.ngram_jaccard_dedup(
-            docs, "doc_id", "text", scratch_policy="sharded", shards=2,
-            mass_policy="proceed", mass_ceiling=-1, plan_info=info2, **kw,
+            docs, "doc_id", "text", shards=2, escalate_above=10**18,
+            plan_info=info2, **_NGRAM_KW,
         )
     )
-    assert proceed == exact
-    assert info2["candidate_mass_escalated"] is False
+    assert below == truth and info2["route"] == "sharded"
 
-    with pytest.raises(ValueError, match="mass_policy"):
+    capsys.readouterr()
+    monkeypatch.setattr(dd, "NGRAM_EXACT_CANDIDATE_CEILING", -1)
+    info3 = {}
+    proceed = _ngram_pairs(
         dd.ngram_jaccard_dedup(
-            docs, "doc_id", "text", mass_policy="panic", **kw
+            docs, "doc_id", "text", shards=2, plan_info=info3, **_NGRAM_KW,
         )
+    )
+    assert proceed == truth and info3["route"] == "sharded"
+    assert "proceeding as asked" in capsys.readouterr().out

@@ -127,29 +127,28 @@ def test_ngram_jaccard_linear_gram_build(spark, sf_dir):
     assert "transform(" not in opt
 
 
-def test_ngram_prefix_light_fallback_has_no_window_sorts(spark, sf_dir):
-    # the fallback exists to avoid the exact path's two gram-stream
-    # window sorts (the measured ~480 B/char scratch); its plan must
-    # contain NO window operator and must broadcast the hot-df table,
-    # while the exact plan keeps its windows — gate both directions
+def test_ngram_prefix_light_fallback_has_no_window_sorts(spark, sf_dir, monkeypatch):
+    # the exact n-gram plan orders grams without a gram-stream sort: the
+    # registered single-pass plan and every pass of the sharded plan
+    # must contain NO window operator and must broadcast the hot-df table
     from mapreduceproject_spark.operators import dedup as dd
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    kw = dict(
-        block_cols=["lang"], length_col="n_chars", n=3, length_band=8,
-        threshold=0.55,
-    )
-    light = _plan(
-        dd.ngram_jaccard_dedup(docs, "doc_id", "text",
-                               scratch_policy="estimate", **kw)
-    )
-    assert "Window" not in light, "prefix-light fallback re-grew a window sort"
-    assert "BroadcastHashJoin" in light  # hot-df table rides a broadcast
-    exact = _plan(
-        dd.ngram_jaccard_dedup(docs, "doc_id", "text",
-                               scratch_policy="exact", **kw)
-    )
-    assert "Window" in exact  # the A/B that makes the gate meaningful
+    real = dd._ngram_jaccard_prefix_light
+    pass_plans = []
+
+    def recording(*args, **kwargs):
+        res = real(*args, **kwargs)
+        pass_plans.append(_plan(res))
+        return res
+
+    monkeypatch.setattr(dd, "_ngram_jaccard_prefix_light", recording)
+    single = _plan(QUERIES["dedup_ngram_jaccard"](spark, sf_dir))
+    assert len(pass_plans) == 1
+    QUERIES["dedup_ngram_sharded"](spark, sf_dir)
+    assert len(pass_plans) == 1 + 6  # 3 shards: 3 diagonal + 3 cross passes
+    for plan in [single, *pass_plans[1:]]:
+        assert "Window" not in plan, "prefix-light plan re-grew a window sort"
+        assert "BroadcastHashJoin" in plan  # hot-df table rides a broadcast
 
 
 def test_decontam_broadcasts_benchmark_grams(spark, sf_dir):

@@ -339,53 +339,6 @@ def test_second_wave_final_windows_pruned(spark, sf_dir):
         assert plan.index("Window") < plan.index("MapInPandas"), name
 
 
-# -- adaptive sharded staging: both modes stay covered -------------------------
-
-
-def test_sharded_staged_mode_still_exact(spark, sf_dir, monkeypatch):
-    # the adaptive decision un-stages fixture-scale passes, so the STAGED
-    # branch (the 1000x disk fix) must keep explicit coverage: force it
-    # by zeroing the floor and headroom, then pin staged == unstaged
-    # output and the in-band plan_info flags
-    from mapreduceproject_spark.operators import dedup as dd
-    from mapreduceproject_spark.plans.dedup_queries import (
-        NGRAM_LEN_BAND,
-        NGRAM_N,
-        NGRAM_THR,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-
-    def run(force_staged: bool):
-        if force_staged:
-            monkeypatch.setattr(dd, "NGRAM_SCRATCH_FLOOR_BYTES", 0)
-        info: dict = {}
-        out = dd.ngram_jaccard_dedup(
-            docs,
-            "doc_id",
-            "text",
-            block_cols=["lang"],
-            length_col="n_chars",
-            n=NGRAM_N,
-            length_band=NGRAM_LEN_BAND,
-            threshold=NGRAM_THR,
-            scratch_policy="sharded",
-            shards=3,
-            scratch_headroom=0.0 if force_staged else 0.5,
-            plan_info=info,
-        )
-        rows = _rows(out)
-        if force_staged:
-            monkeypatch.undo()
-        return rows, info
-
-    staged_rows, staged_info = run(True)
-    plain_rows, plain_info = run(False)
-    assert staged_info["pass_staging"] is True
-    assert plain_info["pass_staging"] is False
-    assert staged_rows == plain_rows
-
-
 def test_knn_edges_fast_brute_path_matches_assign_cells_window(spark, sf_dir):
     """Round-10: knn_edges_ivf's brute path assigns cells with ONE
     max(struct) aggregate and cuts top-k with sort_array+slice.  Pin both

@@ -1,7 +1,6 @@
 """Round-11 suites: NULL-cosine ordering + bounded two-level top-k in the
 kNN edge build, the fused keep-best struct-min aggregate's NULL-quality
-semantics, the single-pass DSIR feature stream, and the auto-routed
-prefix-light plan_info contract."""
+semantics, and the single-pass DSIR feature stream."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from mapreduceproject_spark.operators import dedup as dd
 from mapreduceproject_spark.operators import quality as q
 from mapreduceproject_spark.operators.graph import knn_edges_ivf
 
@@ -334,25 +332,3 @@ def test_dsir_weights_carry_target_flag_inline(spark):
     for (d, b), cnt in per_doc.items():
         want[d] += cnt * lam[b]
     assert got == dict(want)
-
-
-# -- auto-routed prefix-light: plan_info reports EXACT --------------------------
-
-
-def test_ngram_auto_prefix_light_plan_info_reports_exact(spark, sf_dir):
-    """When 'auto' reroutes exact→prefix-light because scratch FITS
-    (auto_fits), the output is exact (PPJoin theorem) and plan_info must
-    say so — round-10 advice: the first cut recorded verify_mode=
-    'estimate' / loss_observed=True for an exact run."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    info = {}
-    out = dd.ngram_jaccard_dedup(
-        docs, "doc_id", "text",
-        block_cols=["lang"], length_col="n_chars", n=3, length_band=8,
-        threshold=0.55, scratch_policy="auto", plan_info=info,
-    )
-    assert info["verify_mode"] == "exact"
-    assert info["routed_prefix_light"] is True
-    assert info["est_candidates"] is None
-    assert info["loss_observed"] is False
-    assert out.count() > 0

@@ -215,3 +215,34 @@ def test_archive_valid_only_at_its_published_size(tmp_path):
     f.write_bytes(b"123")
     assert not session._valid(f)
     assert not session._valid(tmp_path / "abc-x.jsa")
+
+
+def test_live_writer_placeholder_skips_a_second_write(cds_dir, monkeypatch):
+    from pyspark.find_spark_home import _find_spark_home
+
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    key = session._archive_key(session._java_home(), _find_spark_home())
+    # another live process is writing this key's archive
+    live = cds_dir / f"{key}.{os.getppid()}.tmp"
+    live.touch()
+    assert session._cds_launch({}) is None
+    live.unlink()
+    # so is this process: a second JVM would target the same path
+    own = cds_dir / f"{key}.{os.getpid()}.tmp"
+    own.touch()
+    assert session._cds_launch({}) is None
+    own.unlink()
+    # a dead writer's placeholder is cleaned up and the write goes ahead
+    dead = cds_dir / f"{key}.{_dead_pid()}.tmp"
+    dead.touch()
+    flags, tmp = session._cds_launch({})
+    assert f"-XX:ArchiveClassesAtExit={tmp} " in flags
+    assert not dead.exists()
+    assert tmp == own and tmp.is_file() and tmp.stat().st_size == 0
+    assert session._cds_launch({}) is None  # the new placeholder marks it
+    # a writer that exits without replacing its placeholder publishes nothing
+    proc = _Proc()
+    session._dumps.append((proc, tmp))
+    proc.returncode = 0
+    session._publish()
+    assert not list(cds_dir.glob("*.jsa")) and not tmp.exists()
