@@ -536,8 +536,8 @@ NGRAM_EST_HASHES = 24
 # scratch (the 1000× fixture), not for small fixtures on crowded machines.
 NGRAM_SCRATCH_FLOOR_BYTES = 4 << 30
 
-# Share of the free space on spark.local.dir that a single-pass run, or
-# one sharded pass, may plan to fill.
+# Share of the free space on the Spark local dir (_scratch_dir) that a
+# single-pass run, or one sharded pass, may plan to fill.
 NGRAM_SCRATCH_HEADROOM = 0.5
 
 # Prefix-light scratch model, calibrated at the 1000× fixture (5M docs,
@@ -601,8 +601,18 @@ def _ngram_shards_needed(light_need_bytes: int, free_bytes: int) -> int:
 
 
 def _scratch_dir(spark) -> str:
-    """The first spark.local.dir entry: where shuffle scratch lands."""
-    return (spark.conf.get("spark.local.dir", None) or "/tmp").split(",")[0]
+    """The driver's Spark-owned local root, ``<local dir>/spark-<uuid>``:
+    the parent of ``SparkFiles.getRootDirectory()``.
+
+    Spark resolves it from ``SPARK_LOCAL_DIRS`` (or the cluster
+    manager's dirs) before ``spark.local.dir``, so the free-space probe
+    prices the disk shuffle scratch actually uses, and Spark deletes the
+    directory — with any pass output written under it — when the JVM
+    exits."""
+    import os
+
+    jvm = spark.sparkContext._jvm
+    return os.path.dirname(jvm.org.apache.spark.SparkFiles.getRootDirectory())
 
 
 def _ngram_gram_hashes(frame: DataFrame, n: int) -> DataFrame:
@@ -1075,10 +1085,11 @@ def _ngram_jaccard_prefix_sharded(
     EAGER: each pass materializes to a scratch parquet dir (one job per
     pass — shuffle files of finished passes become GC-collectable instead
     of accumulating under one giant job) and the returned DataFrame reads
-    the union back.  The scratch dir lives under spark.local.dir for the
-    session's lifetime.  On a cluster this operator is unnecessary —
-    single-pass prefix-light is <1 GB/node at 100 executors — but
-    "exact, on one box, in S passes" beats "run it elsewhere".
+    the union back.  The scratch dir lives under the driver's Spark local
+    root (:func:`_scratch_dir`), which Spark deletes when the JVM exits.
+    On a cluster this operator is unnecessary — single-pass prefix-light
+    is <1 GB/node at 100 executors — but "exact, on one box, in S
+    passes" beats "run it elsewhere".
 
     ``loss_observation`` attaches to the FIRST pass (lossless everywhere
     by construction; one pass satisfies the uniform zero-drop contract).
@@ -1262,7 +1273,8 @@ def _ngram_jaccard_prefix_sharded(
         gc.collect()
     # a fully duplicate-free corpus can leave zero part files (every pass
     # empty) — return the typed empty frame instead of a schema-inference
-    # error; out_dir is on spark.local.dir, driver-local by definition
+    # error; out_dir is under the driver's Spark local root, driver-local
+    # by definition
     pass_dirs = [
         os.path.join(out_dir, f"p{p}") for p in range(len(passes))
     ]
@@ -1384,7 +1396,7 @@ def ngram_jaccard_dedup(
       ``length_col`` prices its shuffle scratch
       (~{NGRAM_LIGHT_SCRATCH_BYTES_PER_CHAR} B/char measured).  When that
       exceeds both the {NGRAM_SCRATCH_FLOOR_BYTES>>30} GiB floor and
-      ``NGRAM_SCRATCH_HEADROOM`` of the free space on spark.local.dir,
+      ``NGRAM_SCRATCH_HEADROOM`` of the free space on the Spark local dir,
       and ≤ {NGRAM_MAX_SHARDS} doc shards bound it, the same exact
       output is computed by :func:`_ngram_jaccard_prefix_sharded`
       (S× the compute, (2/S)·corpus scratch per pass); past that it

@@ -133,10 +133,13 @@ def knn_edges_ivf(
     # per src: an executor-OOM shape on one hot cell at scale, guide §5,
     # and a reduce-skew shape besides, §2.5) — and cuts each slice to its
     # local top-k; level 2 merges the ≤ P·k survivors per src.  Exactness:
-    # any row in the global top-k under the (nc asc, dst asc) total order
-    # is in its partition's top-k, the partition_topk_prune argument; the
-    # grouping key only decides which partial list a row transits, so the
-    # merged cut is bit-identical for ANY partitioning.  sort_array(struct
+    # (nc asc, dst asc) is a total order (dst is unique per src), and a row
+    # among a src's k best overall is among the k best of whatever slice
+    # holds it — fewer than k rows of that slice can precede it, since
+    # they all precede it globally too.  So every global top-k row
+    # survives level 1, level 2 cuts the same k rows, and the grouping key
+    # only decides which partial list a row transits: the merged cut is
+    # bit-identical for ANY partitioning.  sort_array(struct
     # (nc, dst)) is the same (cosine desc, dst asc) order as the retired
     # row_number window — nc COALESCEs a NULL cosine (zero-norm vector,
     # vectors.py's nullif) to +inf so it sorts LAST, matching the window's

@@ -17,7 +17,10 @@ Two strategies, one verified against the other:
   the standard IVF recall tradeoff.
 
 All cosines use the integer-quantized path (functions/vectors.py) so DuckDB
-oracles reproduce scores — and therefore ranks — bit-for-bit.
+oracles reproduce scores — and therefore ranks — bit-for-bit.  Every ANN
+operator ends in the same exact top-k cut, :func:`_per_query_topk`, which
+Spark runs as a per-partition partial ``WindowGroupLimit`` before the
+per-query exchange.
 """
 
 from __future__ import annotations
@@ -320,7 +323,6 @@ def hyperplane_lsh_topk(
     k: int = 5,
     num_tables: int = 1,
     probe_bits: int = 1,
-    partial_topk: bool | str = "auto",
 ) -> DataFrame:
     """Random-hyperplane LSH top-k: candidates share the query's signature
     bucket or any ≤``probe_bits``-bit-flip neighbor (multi-probe), then
@@ -354,7 +356,6 @@ def hyperplane_lsh_topk(
     operator bit-for-bit (the registered query's oracle pins that
     stream).
     """
-    partial_topk = resolve_partial_topk(partial_topk, corpus)
     cq0 = _quantized_side(corpus, id_col, vec_col, "neighbor_id")
     qq0 = queries.select(
         F.col(query_id_col).alias("query_id"),
@@ -417,19 +418,7 @@ def hyperplane_lsh_topk(
     # within one table no dedup is needed: the probe masks are distinct,
     # so the probed buckets are distinct and a corpus vector's single
     # signature matches at most one probe per query
-    if partial_topk:
-        cand = partition_topk_prune(cand, "query_id", "cosine", "neighbor_id", k)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _per_query_topk(cand, "cosine", k)
 
 
 def _quantized_side(
@@ -464,87 +453,29 @@ def _quantized_side(
     )
 
 
-def partition_topk_prune(
-    scored: DataFrame,
-    key_col: str,
-    order_col: str,
-    tie_col: str,
-    k: int,
+def _per_query_topk(
+    scored: DataFrame, score_col: str, k: int, rank_col: str = "rank"
 ) -> DataFrame:
-    """Per-PARTITION top-k pruning before a per-key window — the round-9
-    verdict's ANN top-k retirement: every scoring plan here used to end
-    with ``Window.partitionBy(query_id)`` + row_number over ALL n·NQ
-    scored rows, i.e. NQ tasks each sorting n rows ("the stage you'd see
-    first in the UI" at n=5M, SCALING.md).  This kernel keeps, per input
-    partition, only each key's best k rows under the (order DESC,
-    tie ASC) total order — so the window's exchange receives ≤ P·k·NQ
-    rows instead of n·NQ, and the sort-bottleneck moves from NQ tasks ×
-    O(n log n) to P embarrassingly-parallel heaps + a trivial final cut.
+    """The one top-k cut every ANN plan ends with: ``row_number`` per
+    query_id under the (score DESC, neighbor_id ASC) total order, rows
+    with rank ≤ k, the rank cast to long (the oracles' BIGINT).
 
-    EXACTNESS: pruning only — any row in the GLOBAL top-k under a total
-    order is necessarily in its partition's top-k, so the downstream
-    window computes bit-identical ranks (pinned by pytest equality vs
-    the unpruned form on every caller).  ``tie_col`` must be non-null
-    and unique per key (neighbor ids are), making the order total;
-    pandas ``na_position='last'`` matches Spark's desc-nulls-last for
-    the one nullable column (``order_col``).
-
-    Arrow cost, honestly: the scored rows cross the Python boundary once
-    (3-4 narrow columns, batched) — at n·NQ = 40M that is seconds spread
-    over every core, versus an NQ-way sort of the same rows through one
-    exchange.  Precondition: key cardinality must be bounded (the ANN
-    contract's broadcast-small query set) — the kernel's running state
-    is keys·k rows per partition, so a corpus-scaled key column would
-    hold keys·k rows in pandas memory per task; use a plain window for
-    that shape.  Payload columns beyond (key, order, tie) pass through
-    untouched (hard-negative labels ride along).
+    Spark plans this as a partial ``WindowGroupLimit`` on every map
+    partition, the per-query ``Exchange``, then the final
+    ``WindowGroupLimit`` + ``Window`` — so the exchange carries at most
+    P·k rows per query, not the n scored rows.  Exact: a row in a
+    query's global top-k under a total order is in its partition's top-k
+    (neighbor_id is unique per query, so the order is total).  Output:
+    ``scored``'s columns, then ``rank_col``.
     """
-    schema = scored.schema
-
-    def kernel(batches):
-        import pandas as pd
-
-        best = None
-        for pdf in batches:
-            cur = pd.concat([best, pdf], ignore_index=True) if best is not None else pdf
-            cur = cur.sort_values(
-                [key_col, order_col, tie_col],
-                ascending=[True, False, True],
-                na_position="last",
-                kind="mergesort",
-            )
-            best = cur.groupby(key_col, sort=False).head(k)
-        if best is not None and len(best):
-            yield best
-
-    return scored.mapInPandas(kernel, schema)
-
-
-# partition_topk_prune is a priced trade: every scored row crosses the
-# Python/Arrow boundary once to cut the final window's input from n·NQ
-# to ≤ P·k·NQ.  At corpus scale the saved NQ-task sort dominates (the
-# 5M-vector PQ decade: 344.6 → 115.9 s, measurements/pq_scale.json);
-# at toy scale the FIXED boundary cost (Python worker round-trip, two
-# row⇄Arrow transposes) IS the query — ann_bruteforce_topk 0.76 → 1.51 s
-# at n=2000, the one code-attributable regression in the round-10
-# driver's PERF artifact.  ``partial_topk="auto"`` (now every ANN
-# caller's default) therefore engages the prune only at or above this
-# corpus row count — size-derived, not core-count-derived, so the bench
-# at any cpu count and a cluster resolve it identically (the
-# NTILE_SINGLE_SORT_MAX_ROWS discipline, operators/layout.py).  Both
-# branches are bit-identical (pytest pins prune ≡ plain on every
-# caller), so the switch is invisible to the oracle.
-ARROW_TOPK_PRUNE_MIN_ROWS = 200_000
-
-
-def resolve_partial_topk(partial_topk: bool | str, corpus: DataFrame) -> bool:
-    """Resolve a ``partial_topk`` policy (``"auto"`` | bool) against the
-    corpus row count.  The one-column count is the only eager action and
-    yields a driver-side policy scalar, never data (the layout_extents
-    branch-pick precedent)."""
-    if partial_topk == "auto":
-        return corpus.count() >= ARROW_TOPK_PRUNE_MIN_ROWS
-    return bool(partial_topk)
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(score_col), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn(rank_col, F.row_number().over(w))
+        .filter(F.col(rank_col) <= k)
+        .select(*scored.columns, F.col(rank_col).cast("long").alias(rank_col))
+    )
 
 
 def brute_force_topk(
@@ -555,20 +486,17 @@ def brute_force_topk(
     query_id_col: str,
     query_vec_col: str,
     k: int = 5,
-    partial_topk: bool | str = "auto",
 ) -> DataFrame:
     """Exact cosine top-k neighbors per query vector.
 
     Output: (query_id, neighbor_id, cosine, rank), self-matches excluded.
     ``queries`` must be broadcast-small; the corpus scan is embarrassingly
-    parallel and the only shuffle is the per-query window top-k — whose
-    input is pre-pruned to ≤ P·k rows per query by
-    :func:`partition_topk_prune` (``partial_topk=False`` keeps the
-    original full-sort form, the pytest equality baseline).  Both
+    parallel and the only shuffle is the per-query top-k cut
+    (:func:`_per_query_topk`), whose partial ``WindowGroupLimit`` sends at
+    most P·k rows per query through it.  Both
     sides are quantized once up front; each of the Q·n scored pairs then
     costs a single O(dim) integer dot product.
     """
-    partial_topk = resolve_partial_topk(partial_topk, corpus)
     q = F.broadcast(
         queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -587,14 +515,7 @@ def brute_force_topk(
             ).alias("cosine"),
         )
     )
-    if partial_topk:
-        scored = partition_topk_prune(scored, "query_id", "cosine", "neighbor_id", k)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("long").alias("rank"))
-    )
+    return _per_query_topk(scored, "cosine", k)
 
 
 def hard_negative_topk(
@@ -607,7 +528,6 @@ def hard_negative_topk(
     query_vec_col: str,
     query_label_col: str,
     k: int = 5,
-    partial_topk: bool | str = "auto",
 ) -> DataFrame:
     """Top-k most-similar vectors with a DIFFERENT label per query —
     contrastive hard-negative mining (the pairs a metric-learning /
@@ -622,7 +542,6 @@ def hard_negative_topk(
     (k widened to survive the label filter); the scoring and ordering
     contract here is the exact baseline that variant is measured against.
     """
-    partial_topk = resolve_partial_topk(partial_topk, corpus)
     q = F.broadcast(
         queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -653,21 +572,7 @@ def hard_negative_topk(
             ).alias("cosine"),
         )
     )
-    if partial_topk:
-        scored = partition_topk_prune(scored, "query_id", "cosine", "neighbor_id", k)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "qlabel",
-            "neighbor_id",
-            "nlabel",
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _per_query_topk(scored, "cosine", k)
 
 
 def ivf_topk(
@@ -681,7 +586,6 @@ def ivf_topk(
     nprobe: int = 4,
     k: int = 5,
     assign: str = "brute",
-    partial_topk: bool | str = "auto",
 ) -> DataFrame:
     """IVF-bucketed approximate top-k: probe the ``nprobe`` max-cosine cells.
 
@@ -694,7 +598,6 @@ def ivf_topk(
     coarse quantization (:func:`assign_cells`) — the n·C fix when C is
     corpus-scaled; the query side stays brute (queries are few).
     """
-    partial_topk = resolve_partial_topk(partial_topk, corpus)
     cq = _quantized_side(corpus, id_col, vec_col, "neighbor_id")
     pick = resolve_centroid_filter(cq, F.col("neighbor_id"), num_centroids)
     centroids = F.broadcast(
@@ -736,14 +639,7 @@ def ivf_topk(
             ).alias("cosine"),
         )
     )
-    if partial_topk:
-        cand = partition_topk_prune(cand, "query_id", "cosine", "neighbor_id", k)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rank").cast("long").alias("rank"))
-    )
+    return _per_query_topk(cand, "cosine", k)
 
 
 def sq8_rerank_topk(
@@ -757,7 +653,6 @@ def sq8_rerank_topk(
     k: int = 5,
     rerank_factor: int = 4,
     narrow_rerank: bool = True,
-    partial_topk: bool | str = "auto",
 ) -> DataFrame:
     """Scalar-quantized (SQ8) ANN with exact rerank.
 
@@ -772,25 +667,22 @@ def sq8_rerank_topk(
     agg expressions — no explode, no per-dim shuffle rows), the 1-row
     stats frame broadcasts into the coding projection, candidate scoring
     is an embarrassingly-parallel broadcast crossJoin (queries are the
-    small side).  With ``narrow_rerank`` (default, round 10) the
-    adot candidate cut runs on NARROW (query_id, neighbor_id, adot)
-    rows — per-partition pruned to ≤ P·rf·k by
-    :func:`partition_topk_prune`, then the residual window — and the
+    small side).  With ``narrow_rerank`` (default) the adot candidate
+    cut (:func:`_per_query_topk` at ``rerank_factor * k``) runs on NARROW
+    (query_id, neighbor_id, adot) rows — its partial ``WindowGroupLimit``
+    keeps ≤ P·rf·k rows per query before the exchange — and the
     ≤ NQ·rf·k surviving ids broadcast back onto the coded table to fetch
-    vectors for the exact rerank.  The retired shape dragged BOTH
-    quantized vector arrays of every scored pair through the NQ-task
-    adot sort (n·NQ array-carrying rows into one window exchange — the
-    heaviest remaining ANN window after the round-10 pruning pass);
-    the rejoin costs one extra broadcast-join scan of the persisted
+    vectors for the exact rerank.  The wide shape drags BOTH quantized
+    vector arrays of every scored pair into the adot cut; the rejoin
+    costs one extra broadcast-join scan of the persisted
     coded table, a linear pass with no shuffle.  Determinism: code
     construction uses the same IEEE double expression tree as the DuckDB
     oracle, so codes — and therefore candidate sets — are bit-identical;
     the adot cut keeps its (adot DESC, neighbor_id ASC) total order; the
     rerank reuses the quantized-integer cosine every other ANN query
-    pins.  ``narrow_rerank=False`` keeps the retired shape as the pytest
+    pins.  ``narrow_rerank=False`` keeps the wide shape as the pytest
     equality baseline.
     """
-    partial_topk = resolve_partial_topk(partial_topk, corpus)
     e = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     stats = F.broadcast(
         corpus.select(e.alias("_e")).agg(
@@ -841,9 +733,6 @@ def sq8_rerank_topk(
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.desc("adot"), F.asc("neighbor_id")
-    )
     if narrow_rerank:
         qcodes = F.broadcast(
             qfull.select("query_id", F.col("_c").alias("_qc"))
@@ -853,14 +742,8 @@ def sq8_rerank_topk(
             .filter(F.col("neighbor_id") != F.col("query_id"))
             .select("query_id", "neighbor_id", adot.alias("adot"))
         )
-        if partial_topk:
-            narrow = partition_topk_prune(
-                narrow, "query_id", "adot", "neighbor_id", rerank_factor * k
-            )
-        cand_ids = (
-            narrow.withColumn("rn", F.row_number().over(wa))
-            .filter(F.col("rn") <= rerank_factor * k)
-            .select("query_id", "neighbor_id")
+        cand_ids = _per_query_topk(narrow, "adot", rerank_factor * k).select(
+            "query_id", "neighbor_id"
         )
         cand = (
             F.broadcast(cand_ids)
@@ -885,26 +768,21 @@ def sq8_rerank_topk(
                 F.col("_c").alias("_qc"),
             )
         )
-        cand = (
+        cand = _per_query_topk(
             cc.crossJoin(qc)
             .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "_qq", "_qn2", "neighbor_id", "_q", "_n2", adot.alias("adot"))
-            .withColumn("rn", F.row_number().over(wa))
-            .filter(F.col("rn") <= rerank_factor * k)
+            .select("query_id", "_qq", "_qn2", "neighbor_id", "_q", "_n2", adot.alias("adot")),
+            "adot",
+            rerank_factor * k,
         )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        cand.select(
-            "query_id",
-            "neighbor_id",
-            prequantized_cosine(
-                F.col("_qq"), F.col("_q"), F.col("_qn2"), F.col("_n2")
-            ).alias("cosine"),
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", F.col("rnk").cast("long").alias("rnk"))
+    scored = cand.select(
+        "query_id",
+        "neighbor_id",
+        prequantized_cosine(
+            F.col("_qq"), F.col("_q"), F.col("_qn2"), F.col("_n2")
+        ).alias("cosine"),
     )
+    return _per_query_topk(scored, "cosine", k, rank_col="rnk")
 
 
 def mahalanobis_outlier_scores(
@@ -1484,7 +1362,6 @@ def pq_topk(
     iterations: int = 2,
     k: int = 5,
     assign: str = "arrow",
-    partial_topk: bool | str = "auto",
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation
     (Jégou et al., PAMI'11): corpus vectors compress to m_sub codebook
@@ -1503,9 +1380,9 @@ def pq_topk(
     m_sub-int code array per vector; scoring BROADCASTS the per-query
     LUTs (NQ·m_sub·k_code longs) over the code table and computes each
     of the n·NQ scores as m_sub codegen array lookups — zero shuffle
-    until the per-query top-k window, whose input is pre-pruned to
-    ≤ P·k·NQ rows by :func:`partition_topk_prune` (round 10; the NQ-task
-    full sort SCALING.md flagged is retired).  Determinism: every LUT entry is
+    until the per-query top-k cut (:func:`_per_query_topk`), whose partial
+    ``WindowGroupLimit`` sends ≤ P·k·NQ rows through the exchange instead
+    of the n·NQ scores.  Determinism: every LUT entry is
     an exact integer dot of quantized vectors; the single double division
     happens once per output row; ties break on neighbor_id.
 
@@ -1513,7 +1390,6 @@ def pq_topk(
     inner-product approximation in original units (÷ SCALE²).
     """
     sub_dim = dim // m_sub
-    partial_topk = resolve_partial_topk(partial_topk, corpus)
     cents = pq_codebooks(
         corpus, id_col, vec_col, dim, m_sub, k_code, iterations, assign
     )
@@ -1575,16 +1451,4 @@ def pq_topk(
             ).alias("score"),
         )
     )
-    if partial_topk:
-        scored = partition_topk_prune(scored, "query_id", "score", "neighbor_id", k)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "score",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _per_query_topk(scored, "score", k)

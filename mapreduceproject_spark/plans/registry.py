@@ -120,9 +120,9 @@ ORACLES: dict[str, str] = {}
 #          evidence is r5.
 # Round-10 window (first 50): 3 new queries (bpe_merge_topk,
 #   nb_quality_score, knn_community_modularity), 10 plan-changed ANN/LPA
-#   entries (the partition_topk_prune + Arrow-PQ-assignment round), then
-#   the 37 oldest remaining rows (r5, in CORRECTNESS_r05 order); the five
-#   r5 names after the cut lead the next rotation.
+#   entries (the Arrow per-partition top-k prune + Arrow-PQ-assignment
+#   round), then the 37 oldest remaining rows (r5, in CORRECTNESS_r05
+#   order); the five r5 names after the cut lead the next rotation.
 # Round-11 window (first 50): see the inline comments in _FRONT below —
 #   27 entries whose PLAN changed in this optimization round (the
 #   window-free knn edge build's bounded two-level top-k + NULL-cosine
@@ -163,10 +163,11 @@ _FRONT: tuple[str, ...] = (
     "knn_label_communities",
     "knn_community_modularity",
     "pagerank_knn",
-    # 7-13: the ANN tier — partition_topk_prune is now SIZE-ADAPTIVE
-    #      (partial_topk="auto", plain plan below ARROW_TOPK_PRUNE_MIN_
-    #      ROWS — the fixture scale), so every plan changed; pq also
-    #      derives sub-vectors from the shared persisted quantized side.
+    # 7-13: the ANN tier — every plan changed with the size-adaptive
+    #      Arrow top-k prune (since replaced by Spark's partial
+    #      WindowGroupLimit on the one row_number cut); pq derives its
+    #      sub-vectors from the raw corpus vectors (_pq_subvectors), not
+    #      from a shared quantized side.
     "ann_bruteforce_topk",
     "ann_ivf_topk",
     "ann_hard_negatives",

@@ -170,20 +170,7 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    # per-partition top-k prune before the per-query rank window (the
-    # round-10 ANN discipline — operators/similarity.py), engaged only
-    # above the size bound (round 11: the Arrow boundary's fixed cost
-    # beats the saved sort at toy scale — see ARROW_TOPK_PRUNE_MIN_ROWS)
-    if sim.resolve_partial_topk("auto", emb):
-        scored = sim.partition_topk_prune(
-            scored, "query_id", "cosine", "neighbor_id", TOP_K
-        )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", F.col("rnk").cast("long").alias("rnk"))
-    )
+    return sim._per_query_topk(scored, "cosine", TOP_K, rank_col="rnk")
 
 
 # -- k-means clustering -----------------------------------------------------

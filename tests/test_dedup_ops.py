@@ -510,6 +510,55 @@ def test_sharded_staged_mode_still_exact(spark, sf_dir, monkeypatch):
     assert staged_rows == plain_rows and plain_rows
 
 
+_SCRATCH_SCRIPT = """
+import glob, sys
+sys.path.insert(0, {repo!r})
+from mapreduceproject_spark.session import get_spark
+from mapreduceproject_spark.operators import dedup as dd
+spark = get_spark(app_name="scratch-test", master="local[2]", shuffle_partitions=2)
+scratch = dd._scratch_dir(spark)
+docs = spark.read.parquet({sf!r} + "/documents.parquet")
+pairs = dd.ngram_jaccard_dedup(docs, "doc_id", "text", shards=2, **{kw!r}).count()
+print("RESULT", scratch, pairs, len(glob.glob(scratch + "/ngram-sharded-*")))
+spark.stop()
+"""
+
+
+def test_sharded_scratch_under_spark_local_dirs_goes_with_the_jvm(sf_dir, tmp_path):
+    """``_scratch_dir`` is the driver root Spark makes under
+    ``SPARK_LOCAL_DIRS`` (which overrides ``spark.local.dir``), so the
+    free-space probe prices the shuffle disk, and a sharded call's pass
+    output is deleted with that root when the session's JVM exits."""
+    import os
+    import subprocess
+    import sys
+    import time
+    from pathlib import Path
+
+    local = tmp_path / "spark-local"
+    local.mkdir()
+    repo = Path(__file__).resolve().parent.parent
+    script = _SCRATCH_SCRIPT.format(repo=str(repo), sf=sf_dir, kw=_NGRAM_KW)
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        env={**os.environ, "SPARK_LOCAL_DIRS": str(local)},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    line = next(l for l in proc.stdout.splitlines() if l.startswith("RESULT"))
+    _, scratch, pairs, live = line.split()
+    assert Path(scratch).parent == local
+    assert int(pairs) > 0 and int(live) == 1
+    # Spark deletes its root in a JVM shutdown hook, which may still be
+    # running when the Python process has returned
+    deadline = time.monotonic() + 60
+    while list(local.rglob("ngram-sharded-*")) and time.monotonic() < deadline:
+        time.sleep(0.5)
+    assert not list(local.rglob("ngram-sharded-*"))
+
+
 def test_ngram_auto_routes_to_sharded(spark, sf_dir, monkeypatch):
     """The 1000x closure: when prefix-light's scratch estimate exceeds
     the headroom but a sane shard count bounds it, the default runs the

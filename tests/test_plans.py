@@ -622,3 +622,106 @@ def test_label_propagation_natural_key_exchanges_only(spark, sf_dir):
 
     for m in re.finditer(r"Sort \[[^\]]*\], (\w+),", plan):
         assert m.group(1) == "false", f"global sort in plan: {m.group(0)}"
+
+
+# -- ANN top-k: one exact cut, pruned per partition by Spark ------------------
+
+_ANN_TOPK_QUERIES = (
+    "ann_bruteforce_topk",
+    "ann_hard_negatives",
+    "ann_ivf_topk",
+    "ann_hyperplane_topk",
+    "ann_sq8_rerank_topk",
+    "ann_pq_topk",
+    "ann_filtered_topk",
+)
+
+
+def _partial_topk_limits(plan: str) -> list[int]:
+    """Limits of the partial ``WindowGroupLimit``s whose parent is the
+    per-query hash ``Exchange``: the per-partition top-k Spark runs
+    below the shuffle of a ``row_number`` ≤ k cut."""
+    import re
+
+    lines = plan.splitlines()
+    return [
+        int(m.group(1))
+        for above, line in zip(lines, lines[1:])
+        if "Exchange hashpartitioning(query_id#" in above
+        and (
+            m := re.search(
+                r"WindowGroupLimit \[query_id#\d+L?\], .*row_number\(\), (\d+), Partial",
+                line,
+            )
+        )
+    ]
+
+
+def test_ann_topk_cuts_pruned_by_partial_window_group_limit(spark, sf_dir):
+    # every ANN top-k plan ends in _per_query_topk's row_number cut; the
+    # pruning below its exchange is Spark's partial WindowGroupLimit, and
+    # no plan crosses into Python for it.  pq_topk's only Python node is
+    # the Arrow codebook assignment of its encode step
+    # (_pq_assign_arrow: (id, m, sq) -> + cid).
+    import re
+
+    from mapreduceproject_spark.plans.similarity_queries import SQ8_RERANK, TOP_K
+
+    for name in _ANN_TOPK_QUERIES:
+        plan = _plan(QUERIES[name](spark, sf_dir))
+        limits = _partial_topk_limits(plan)
+        assert TOP_K in limits, (name, limits)
+        if name == "ann_sq8_rerank_topk":
+            # the adot candidate cut is pruned too, not only the rerank
+            assert SQ8_RERANK * TOP_K in limits, limits
+        pandas = [line for line in plan.splitlines() if "MapInPandas" in line]
+        if name == "ann_pq_topk":
+            assert pandas, "pq's Arrow codebook assignment is missing"
+            for line in pandas:
+                assert re.search(r"\[id#\d+L, m#\d+, sq#\d+, cid#\d+\]", line), line
+        else:
+            assert not pandas, (name, pandas)
+
+
+def test_ann_operator_build_starts_no_job(spark, sf_dir, monkeypatch):
+    # building an ANN plan is lazy: no count or collect runs before the
+    # caller's sink.  pq_topk is left out on purpose: pq_codebooks trains
+    # and collects its codebook eagerly while the plan is built.  Inputs
+    # are read first: a parquet read's schema inference is a job of its
+    # own, so ann_filtered_topk gets the frame already read.
+    from mapreduceproject_spark.operators import similarity as sim
+    from mapreduceproject_spark.plans import similarity_queries
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    monkeypatch.setattr(similarity_queries, "load_table", lambda *a: emb)
+    labeled = emb.withColumn("label", (F.col("vec_id") % 3).cast("long"))
+    qs = emb.filter(F.col("vec_id") < 4)
+    args = (emb, qs, "vec_id", "embedding", "vec_id", "embedding")
+    builds = {
+        "brute": lambda: sim.brute_force_topk(*args, k=5),
+        "hard_negative": lambda: sim.hard_negative_topk(
+            labeled, labeled.filter(F.col("vec_id") < 4),
+            "vec_id", "embedding", "label", "vec_id", "embedding", "label", k=5,
+        ),
+        "ivf": lambda: sim.ivf_topk(*args, num_centroids="auto", nprobe=4, k=5),
+        "hyperplane": lambda: sim.hyperplane_lsh_topk(
+            *args, num_bits=6, k=5, num_tables=2
+        ),
+        "sq8": lambda: sim.sq8_rerank_topk(*args, dim=64, k=5),
+        "filtered": lambda: QUERIES["ann_filtered_topk"](spark, sf_dir),
+    }
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        for name, build in builds.items():
+            group = f"ann-build-{name}"
+            sc.setJobGroup(group, group)
+            df = build()
+            assert tracker.getJobIdsForGroup(group) == [], name
+            # the group does see jobs: the sink's run under it
+            df.write.format("noop").mode("overwrite").save()
+            assert tracker.getJobIdsForGroup(group), name
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.catalog.clearCache()

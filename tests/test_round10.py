@@ -1,7 +1,7 @@
-"""Round-10 suites: per-partition ANN top-k pruning (bit-equality +
-plan gates), Arrow PQ assignment ≡ HOF form, LPA convergence gauge +
-modularity hand-truth, BPE merge hand-truth (overlap semantics), and
-the NB quality classifier's calibration table."""
+"""Round-10 suites: Arrow PQ assignment ≡ HOF form, sq8 narrow rerank ≡
+wide form, LPA convergence gauge + modularity hand-truth, BPE merge
+hand-truth (overlap semantics), and the NB quality classifier's
+calibration table."""
 
 from __future__ import annotations
 
@@ -14,137 +14,11 @@ from mapreduceproject_spark.operators.graph import (
     community_modularity,
     label_propagation,
 )
-from mapreduceproject_spark.plans import QUERIES
 from mapreduceproject_spark.sources.catalog import load_table
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-# -- per-partition top-k pruning ----------------------------------------------
-
-
-def test_brute_force_topk_prune_bit_equal(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 4)
-    a = sim.brute_force_topk(
-        emb, qs, "vec_id", "embedding", "vec_id", "embedding", k=5,
-        partial_topk=True,
-    )
-    b = sim.brute_force_topk(
-        emb, qs, "vec_id", "embedding", "vec_id", "embedding", k=5,
-        partial_topk=False,
-    )
-    assert _rows(a) == _rows(b)
-
-
-def test_hard_negative_topk_prune_bit_equal(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "label", (F.col("vec_id") % 3).cast("long")
-    )
-    qs = emb.filter(F.col("vec_id") < 4)
-    args = (emb, qs, "vec_id", "embedding", "label", "vec_id", "embedding", "label")
-    a = sim.hard_negative_topk(*args, k=5, partial_topk=True)
-    b = sim.hard_negative_topk(*args, k=5, partial_topk=False)
-    assert _rows(a) == _rows(b)
-
-
-def test_ivf_topk_prune_bit_equal(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 4)
-    args = (emb, qs, "vec_id", "embedding", "vec_id", "embedding")
-    a = sim.ivf_topk(*args, num_centroids=16, nprobe=4, k=5, partial_topk=True)
-    b = sim.ivf_topk(*args, num_centroids=16, nprobe=4, k=5, partial_topk=False)
-    assert _rows(a) == _rows(b)
-
-
-def test_pq_topk_prune_bit_equal(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 4)
-    args = (emb, qs, "vec_id", "embedding", "vec_id", "embedding")
-    a = sim.pq_topk(*args, dim=64, k=5, partial_topk=True)
-    b = sim.pq_topk(*args, dim=64, k=5, partial_topk=False)
-    assert _rows(a) == _rows(b)
-
-
-def test_ann_final_window_input_pruned(spark, sf_dir):
-    # plan gate (round-9 verdict #3, made size-adaptive round 11): when
-    # the prune is ENGAGED the per-query rank window's input must be the
-    # per-partition top-k kernel's output (≤ P·k·NQ rows), never the raw
-    # n·NQ scored stream.  In the physical tree the Window is the PARENT
-    # of the pruning MapInPandas, so it prints first.
-    emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 4)
-    args = (emb, qs, "vec_id", "embedding", "vec_id", "embedding")
-    for name, df in (
-        ("brute", sim.brute_force_topk(*args, k=5, partial_topk=True)),
-        ("pq", sim.pq_topk(*args, dim=64, k=5, partial_topk=True)),
-        (
-            "hard_neg",
-            sim.hard_negative_topk(
-                emb.withColumn("label", (F.col("vec_id") % 3).cast("long")),
-                qs.withColumn("label", (F.col("vec_id") % 3).cast("long")),
-                "vec_id", "embedding", "label",
-                "vec_id", "embedding", "label",
-                k=5, partial_topk=True,
-            ),
-        ),
-    ):
-        plan = _plan(df)
-        assert "MapInPandas" in plan, name
-        assert "Window" in plan, name
-        assert plan.index("Window") < plan.index("MapInPandas"), name
-
-
-def test_ann_prune_adaptive_off_at_toy_scale(spark, sf_dir):
-    # round-11: partial_topk="auto" (the registered queries' default)
-    # must resolve to the PLAIN plan below ARROW_TOPK_PRUNE_MIN_ROWS —
-    # the Arrow boundary's fixed cost was the round-10 driver's one real
-    # regression (ann_bruteforce_topk 0.76 -> 1.51 s at n=2000).  The
-    # fixture corpora sit far below the bound, so no registered ANN
-    # query's plan may contain the pruning MapInPandas here.
-    assert sim.ARROW_TOPK_PRUNE_MIN_ROWS > 10_000  # fixture headroom
-    # (ann_pq_topk/_recall excluded: their plans legitimately keep the
-    # Arrow PQ-assignment kernels — only the top-k prune is adaptive)
-    for name in (
-        "ann_bruteforce_topk", "ann_hard_negatives",
-        "ann_sq8_rerank_topk", "ann_filtered_topk", "ann_hyperplane_topk",
-        "ann_ivf_topk",
-    ):
-        if name not in QUERIES:
-            continue
-        plan = _plan(QUERIES[name](spark, sf_dir))
-        assert "MapInPandas" not in plan, name
-
-
-def test_partition_topk_prune_keeps_per_key_duplicates_straight(spark):
-    # two keys interleaved across partitions; ties on the order column
-    # resolved by the tie column — global result must match the plain
-    # window cut regardless of partitioning
-    rows = [
-        (k, float(v % 3), k * 100 + v) for k in (1, 2) for v in range(40)
-    ]
-    df = spark.createDataFrame(rows, "qid int, score double, nid long").repartition(7)
-    pruned = sim.partition_topk_prune(df, "qid", "score", "nid", 4)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("nid"))
-    expect = (
-        df.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 4)
-        .drop("rn")
-    )
-    got = (
-        pruned.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 4)
-        .drop("rn")
-    )
-    assert _rows(got) == _rows(expect)
 
 
 # -- Arrow PQ assignment -------------------------------------------------------
@@ -287,56 +161,16 @@ def test_nb_quality_calibration_table(spark, sf_dir):
     )
 
 
-# -- second wave: sq8 narrow rerank + hyperplane/filtered pruning --------------
+# -- sq8 narrow rerank ---------------------------------------------------------
 
 
 def test_sq8_narrow_rerank_bit_equal(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 4)
     args = (emb, qs, "vec_id", "embedding", "vec_id", "embedding")
-    a = sim.sq8_rerank_topk(*args, dim=64, k=5, partial_topk=True)
+    a = sim.sq8_rerank_topk(*args, dim=64, k=5)
     b = sim.sq8_rerank_topk(*args, dim=64, k=5, narrow_rerank=False)
     assert _rows(a) == _rows(b)
-
-
-def test_hyperplane_topk_prune_bit_equal(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 4)
-    args = (emb, qs, "vec_id", "embedding", "vec_id", "embedding")
-    # num_tables=2 exercises the cross-table max-collapse before the cut
-    a = sim.hyperplane_lsh_topk(
-        *args, num_bits=6, k=5, num_tables=2, probe_bits=1, partial_topk=True
-    )
-    b = sim.hyperplane_lsh_topk(
-        *args, num_bits=6, k=5, num_tables=2, probe_bits=1, partial_topk=False
-    )
-    assert _rows(a) == _rows(b)
-
-
-def test_second_wave_final_windows_pruned(spark, sf_dir):
-    # same gate as test_ann_final_window_input_pruned, extended to the
-    # three remaining ANN windows (sq8's heaviest window — the adot cut —
-    # runs on narrow pruned rows; filtered and hyperplane prune before
-    # their rank windows).  partial_topk=True forces the prune — the
-    # registered queries' "auto" keeps the plain plan at fixture scale
-    # (see test_ann_prune_adaptive_off_at_toy_scale).
-    emb = load_table(spark, sf_dir, "embeddings")
-    qs = emb.filter(F.col("vec_id") < 4)
-    args = (emb, qs, "vec_id", "embedding", "vec_id", "embedding")
-    for name, df in (
-        ("sq8", sim.sq8_rerank_topk(*args, dim=64, k=5, partial_topk=True)),
-        (
-            "hyperplane",
-            sim.hyperplane_lsh_topk(
-                *args, num_bits=6, k=5, num_tables=2, probe_bits=1,
-                partial_topk=True,
-            ),
-        ),
-        ("ivf", sim.ivf_topk(*args, num_centroids=16, nprobe=4, k=5, partial_topk=True)),
-    ):
-        plan = _plan(df)
-        assert "MapInPandas" in plan, name
-        assert plan.index("Window") < plan.index("MapInPandas"), name
 
 
 def test_knn_edges_fast_brute_path_matches_assign_cells_window(spark, sf_dir):

@@ -193,19 +193,6 @@ def test_knn_edges_topk_aggregation_state_bounded(spark, sf_dir):
     assert "Window" not in plan  # the round-10 window-free shape holds
 
 
-def test_arrow_prune_bound_resolution(spark):
-    """The adaptive bound must keep the prune ENGAGED at the pq_scale
-    decades (1M/5M vectors — where it bought 3×,
-    measurements/pq_scale.json) and DISENGAGED at fixture scale: the
-    round-10 verdict's done-criterion for #2 in one cheap pin."""
-    from mapreduceproject_spark.operators import similarity as sim
-
-    assert sim.resolve_partial_topk("auto", spark.range(1_000_000)) is True
-    assert sim.resolve_partial_topk("auto", spark.range(2_000)) is False
-    assert sim.resolve_partial_topk(True, spark.range(1)) is True
-    assert sim.resolve_partial_topk(False, spark.range(10**9)) is False
-
-
 # -- keep-best: fused struct-min ≡ rank-1 window under NULL quality -----------
 
 
