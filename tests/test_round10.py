@@ -1,7 +1,7 @@
-"""Round-10 suites: Arrow PQ assignment ≡ HOF form, sq8 narrow rerank ≡
-wide form, LPA convergence gauge + modularity hand-truth, BPE merge
-hand-truth (overlap semantics), and the NB quality classifier's
-calibration table."""
+"""Round-10 suites: per-partition ANN top-k pruning (plan gates), Arrow
+PQ assignment ≡ HOF form, sq8 narrow rerank ≡ wide form, LPA convergence
+gauge + modularity hand-truth, BPE merge hand-truth (overlap semantics),
+and the NB quality classifier's calibration table."""
 
 from __future__ import annotations
 
@@ -14,11 +14,63 @@ from mapreduceproject_spark.operators.graph import (
     community_modularity,
     label_propagation,
 )
+from mapreduceproject_spark.plans import QUERIES
 from mapreduceproject_spark.sources.catalog import load_table
+from tests.test_plans import _partial_topk_limits, _plan
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+# -- per-partition top-k pruning ----------------------------------------------
+
+
+def _assert_rank_window_input_pruned(name, df, *cuts):
+    # the per-query rank window's input is a per-partition top-k (at most
+    # P·k rows per query), never the raw scored stream: Spark's partial
+    # WindowGroupLimit sits below the query_id Exchange.  In the physical
+    # tree the Window is its ancestor, so it prints first.
+    plan = _plan(df)
+    limits = _partial_topk_limits(plan)
+    for cut in cuts:
+        assert cut in limits, (name, cut, limits)
+    assert plan.index("Window [") < plan.index(", Partial"), name
+
+
+def test_ann_final_window_input_pruned(spark, sf_dir):
+    emb = load_table(spark, sf_dir, "embeddings")
+    qs = emb.filter(F.col("vec_id") < 4)
+    args = (emb, qs, "vec_id", "embedding", "vec_id", "embedding")
+    for name, df in (
+        ("brute", sim.brute_force_topk(*args, k=5)),
+        ("pq", sim.pq_topk(*args, dim=64, k=5)),
+        (
+            "hard_neg",
+            sim.hard_negative_topk(
+                emb.withColumn("label", (F.col("vec_id") % 3).cast("long")),
+                qs.withColumn("label", (F.col("vec_id") % 3).cast("long")),
+                "vec_id", "embedding", "label",
+                "vec_id", "embedding", "label",
+                k=5,
+            ),
+        ),
+    ):
+        _assert_rank_window_input_pruned(name, df, 5)
+
+
+def test_ann_prune_adaptive_off_at_toy_scale(spark, sf_dir):
+    # the per-partition prune is Spark's own partial WindowGroupLimit, so
+    # no registered ANN query crosses into Python for it at any scale.
+    # (ann_pq_topk is excluded: its plan keeps the Arrow PQ-assignment
+    # kernel of its encode step)
+    for name in (
+        "ann_bruteforce_topk", "ann_hard_negatives",
+        "ann_sq8_rerank_topk", "ann_filtered_topk", "ann_hyperplane_topk",
+        "ann_ivf_topk",
+    ):
+        plan = _plan(QUERIES[name](spark, sf_dir))
+        assert "MapInPandas" not in plan, name
 
 
 # -- Arrow PQ assignment -------------------------------------------------------
@@ -171,6 +223,28 @@ def test_sq8_narrow_rerank_bit_equal(spark, sf_dir):
     a = sim.sq8_rerank_topk(*args, dim=64, k=5)
     b = sim.sq8_rerank_topk(*args, dim=64, k=5, narrow_rerank=False)
     assert _rows(a) == _rows(b)
+
+
+def test_second_wave_final_windows_pruned(spark, sf_dir):
+    # same gate as test_ann_final_window_input_pruned, extended to the
+    # three remaining ANN operators: sq8's heaviest window (the adot cut
+    # at rerank_factor·k) is pruned as well as its final rerank window;
+    # hyperplane with two tables prunes after its cross-table collapse.
+    emb = load_table(spark, sf_dir, "embeddings")
+    qs = emb.filter(F.col("vec_id") < 4)
+    args = (emb, qs, "vec_id", "embedding", "vec_id", "embedding")
+    for name, df, cuts in (
+        ("sq8", sim.sq8_rerank_topk(*args, dim=64, k=5, rerank_factor=4), (5, 20)),
+        (
+            "hyperplane",
+            sim.hyperplane_lsh_topk(
+                *args, num_bits=6, k=5, num_tables=2, probe_bits=1
+            ),
+            (5,),
+        ),
+        ("ivf", sim.ivf_topk(*args, num_centroids=16, nprobe=4, k=5), (5,)),
+    ):
+        _assert_rank_window_input_pruned(name, df, *cuts)
 
 
 def test_knn_edges_fast_brute_path_matches_assign_cells_window(spark, sf_dir):
