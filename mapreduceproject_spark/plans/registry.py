@@ -193,8 +193,10 @@ _FRONT: tuple[str, ...] = (
     "dsir_importance_weights",
     "text_langid_ngram",
     "bpe_merge_topk",
-    # 25-27: layout audit single count; distributed_rank persist ->
-    #      lazy localCheckpoint (same materialization, no cache leak).
+    # 25-27: layout audit single count; distributed_rank's persist ->
+    #      lazy localCheckpoint swap was built and reverted
+    #      (operators/ranking.py kept persist), so vocab_stats and
+    #      token_zipf_fit plans did not change.
     "zorder_layout_extents",
     "vocab_stats",
     "token_zipf_fit",

@@ -6,13 +6,26 @@ The reference's namespace is flat filenames gossiped in ``fileTable``
 tables under a scale-factor directory, read with explicit Spark readers so
 Catalyst gets real schemas, column pruning and predicate pushdown — none of
 which exist in the reference (bytes-only SDFS, SURVEY §1.2).
+
+Like the reference's master, which answers ``LS``/``GET`` from the file
+table it already holds, the catalog works out each table's schema once:
+``parquet_schema`` memoizes ``spark.read.parquet(path).schema``, which
+otherwise starts a one-task footer-read Spark job on every read.  The memo
+key is the file's identity from ``os.stat`` (device, inode, size,
+``st_mtime_ns``) plus the session's parquet-reading SQL confs (every
+``spark.sql.parquet.*`` and ``spark.sql.legacy.parquet.*`` entry, and
+``spark.sql.caseSensitive``), so a rewritten file or a conf that changes
+the inferred types is a miss.  Only the schema is kept: every read still
+builds a fresh relation and file index.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -33,6 +46,44 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # overridden by load_table's UTC pin (see load_table) — warn once, not
 # per-table.
 _TZ_WARNED: set[str] = set()
+
+# (device, inode, size, mtime_ns, parquet-reading confs) -> inferred schema.
+# Not tied to a session: a cloned session with the same confs shares it.
+_SCHEMAS: dict[tuple, StructType] = {}
+_SCHEMA_CONF_PREFIXES = (
+    "spark.sql.parquet.",
+    "spark.sql.legacy.parquet.",
+    "spark.sql.caseSensitive -> ",
+)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """``spark.read.parquet(path).schema``, inferred once per file and conf set.
+
+    A hit starts no Spark job.  A miss infers exactly as a plain read does.
+    The key covers every conf the parquet schema converter may read
+    (binary-as-string, INT96, NTZ inference, ``nanosAsLong``, field ids,
+    ...) without naming them one by one.  A path ``os.stat`` cannot see
+    (a remote filesystem) or that is not a regular file (a directory's
+    mtime misses rewrites below it) is inferred on every call.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path).schema
+    # The session's "key -> value" conf entries in one py4j call: the
+    # public ``spark.conf.getAll`` makes round trips per entry, 17-29 ms
+    # for a few dozen confs, a fifth or more of the inference it saves.
+    entries = spark.conf._jconf.getAll().mkString("\0").split("\0")
+    confs = tuple(sorted(e for e in entries if e.startswith(_SCHEMA_CONF_PREFIXES)))
+    key = (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns, confs)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return schema
+
 
 def spread_for_compute(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition a narrow scan up to default parallelism — only when the
@@ -63,6 +114,11 @@ def spread_for_compute(df: DataFrame, min_partitions: int | None = None) -> Data
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Plain parquet scan: pushdown/pruning-ready.
+
+    The scan is declared with the table's memoized schema
+    (``parquet_schema``), so only the first read of a file under a given
+    set of parquet-reading confs infers it; later calls build the plan
+    without starting a Spark job.
 
     ``events.ts`` is parquet TIMESTAMP(NANOS); with
     ``spark.sql.legacy.parquet.nanosAsLong`` it scans as a nanosecond long,
@@ -115,7 +171,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # builds its own bare SparkSession, and without this the scan
         # throws PARQUET_TYPE_ILLEGAL (runtime-settable SQL conf).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F
 

@@ -23,11 +23,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from mapreduceproject_spark.sources.catalog import parquet_schema
 
 # Fallback schema for fixtures whose ts is TIMESTAMP(NANOS): under
 # spark.sql.legacy.parquet.nanosAsLong that column arrives as a nanosecond
@@ -50,15 +53,17 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fixture's ts physical type is not under our control
     (TIMESTAMP(MICROS) in current driver-generated data, TIMESTAMP(NANOS)
     in earlier rounds), and the file stream source needs an explicit
-    schema — so probe the batch reader's resolved schema (driver-side
-    footer read, no data scan) and branch: a Spark-native timestamp
-    streams as-is; a nanosAsLong bigint gets the ns→µs conversion.
+    schema — so probe the batch reader's resolved schema and branch: a
+    Spark-native timestamp streams as-is; a nanosAsLong bigint gets the
+    ns→µs conversion.  The probe is the catalog's schema memo
+    (``sources.catalog.parquet_schema``): the first call for a file infers
+    it with a one-task footer-read Spark job, later calls start no job.
     Assuming one scale silently shifts every event time 1000× on the
     other kind of file — windows collapse and interval joins explode.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir.rstrip('/')}/events.parquet"
-    batch_schema = spark.read.parquet(path).schema
+    batch_schema = parquet_schema(spark, path)
     nanos = dict((f.name, f.dataType.simpleString()) for f in batch_schema).get("ts") == "bigint"
     # glob (not a bare file path): the file stream source requires its
     # basePath to be a directory, and the pattern keeps it scoped to the
@@ -314,6 +319,13 @@ def upsert_latest_per_key(
         raise ValueError(f"commit must be 'rename' or 'manifest', got {commit!r}")
 
     kb = F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets))
+    # The table holds the stream's columns, partitioned by _kb, whose
+    # small non-negative values partition discovery types as int.  Every
+    # read below declares this schema, so none starts a footer-read job to
+    # infer it (file-source reads come back nullable either way).
+    table_schema = StructType(
+        list(stream.schema.fields) + [StructField("_kb", IntegerType())]
+    )
 
     def merge_latest(unioned: DataFrame) -> DataFrame:
         w = Window.partitionBy(*key_cols).orderBy(
@@ -406,7 +418,7 @@ def upsert_latest_per_key(
         if cur_dirs:
             # leaf-dir reads carry no partition column; _kb is a pure
             # function of the keys, so recompute instead of re-reading it
-            current = s.read.parquet(*cur_dirs).withColumn("_kb", kb)
+            current = s.read.schema(stream.schema).parquet(*cur_dirs).withColumn("_kb", kb)
             unioned = current.unionByName(b)
         else:
             unioned = b
@@ -500,7 +512,11 @@ def upsert_latest_per_key(
         if os.path.exists(path) and any(
             e.startswith("_kb=") for e in os.listdir(path)
         ):
-            current = s.read.parquet(path).filter(F.col("_kb").isin(buckets))
+            current = (
+                s.read.schema(table_schema)
+                .parquet(path)
+                .filter(F.col("_kb").isin(buckets))
+            )
             unioned = current.unionByName(b)
         else:  # first batch: no table yet
             unioned = b
@@ -543,12 +559,12 @@ def upsert_latest_per_key(
         dirs = [
             os.path.join(path, g, f"_kb={bk}") for bk, g in sorted(mapping.items())
         ]
-        return spark.read.parquet(*dirs)
+        return spark.read.schema(stream.schema).parquet(*dirs)
     if not os.path.exists(path):
         # zero data rows: no batch ever wrote the table — the converged
         # state is the empty table with the stream's schema
         return spark.createDataFrame([], schema=stream.schema)
-    return spark.read.parquet(path).drop("_kb")
+    return spark.read.schema(table_schema).parquet(path).drop("_kb")
 
 
 def _hadoop_fs(spark: SparkSession, path: str):

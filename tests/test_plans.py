@@ -10,6 +10,8 @@ drops a pushed filter fails here even though results stay correct.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 
 from mapreduceproject_spark.plans import QUERIES
@@ -683,17 +685,49 @@ def test_ann_topk_cuts_pruned_by_partial_window_group_limit(spark, sf_dir):
             assert not pandas, (name, pandas)
 
 
-def test_ann_operator_build_starts_no_job(spark, sf_dir, monkeypatch):
+def _assert_builds_start_no_job(spark, builds: dict) -> None:
+    """Build each plan under its own job group: the build must start no
+    Spark job, while its sink, run under the same group, does."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        for name, build in builds.items():
+            group = f"build-{name}"
+            sc.setJobGroup(group, group)
+            df = build()
+            assert tracker.getJobIdsForGroup(group) == [], name
+            # the group does see jobs: the sink's run under it
+            df.write.format("noop").mode("overwrite").save()
+            assert tracker.getJobIdsForGroup(group), name
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.catalog.clearCache()
+
+
+TPCH_BENCH_QUERIES = (
+    "q1_pricing_summary", "q3_shipping_priority", "q5_region_revenue",
+    "q6_forecast_revenue", "q12_late_shipments", "q18_large_orders",
+)
+
+
+def test_tpch_rebuild_starts_no_job(spark, sf_dir):
+    # the first build of each query reads every table's schema once; the
+    # catalog's schema memo answers every later build without a job
+    for name in TPCH_BENCH_QUERIES:
+        QUERIES[name](spark, sf_dir)
+    _assert_builds_start_no_job(
+        spark, {name: partial(QUERIES[name], spark, sf_dir) for name in TPCH_BENCH_QUERIES}
+    )
+
+
+def test_ann_operator_build_starts_no_job(spark, sf_dir):
     # building an ANN plan is lazy: no count or collect runs before the
     # caller's sink.  pq_topk is left out on purpose: pq_codebooks trains
-    # and collects its codebook eagerly while the plan is built.  Inputs
-    # are read first: a parquet read's schema inference is a job of its
-    # own, so ann_filtered_topk gets the frame already read.
+    # and collects its codebook eagerly while the plan is built.
     from mapreduceproject_spark.operators import similarity as sim
-    from mapreduceproject_spark.plans import similarity_queries
 
     emb = load_table(spark, sf_dir, "embeddings")
-    monkeypatch.setattr(similarity_queries, "load_table", lambda *a: emb)
     labeled = emb.withColumn("label", (F.col("vec_id") % 3).cast("long"))
     qs = emb.filter(F.col("vec_id") < 4)
     args = (emb, qs, "vec_id", "embedding", "vec_id", "embedding")
@@ -710,18 +744,4 @@ def test_ann_operator_build_starts_no_job(spark, sf_dir, monkeypatch):
         "sq8": lambda: sim.sq8_rerank_topk(*args, dim=64, k=5),
         "filtered": lambda: QUERIES["ann_filtered_topk"](spark, sf_dir),
     }
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    try:
-        for name, build in builds.items():
-            group = f"ann-build-{name}"
-            sc.setJobGroup(group, group)
-            df = build()
-            assert tracker.getJobIdsForGroup(group) == [], name
-            # the group does see jobs: the sink's run under it
-            df.write.format("noop").mode("overwrite").save()
-            assert tracker.getJobIdsForGroup(group), name
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        spark.catalog.clearCache()
+    _assert_builds_start_no_job(spark, builds)

@@ -464,6 +464,39 @@ def _lts_stream(spark, tmp_path, rows, subdir):
     return spark.readStream.schema(schema).parquet(str(src))
 
 
+@pytest.mark.parametrize("commit", ["rename", "manifest"])
+def test_upsert_reads_declare_the_inferred_schema(spark, sf_dir, tmp_path, monkeypatch, commit):
+    """Every read of the upsert's own table (the per-batch current read and
+    the final read) declares its schema instead of inferring it, and what
+    it declares is what inference gives, the _kb partition type included."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    path = str(tmp_path / "state")
+    real = DataFrameReader.parquet
+    reads = []
+
+    def recording(self, *paths, **options):
+        df = real(self, *paths, **options)
+        if all(p.startswith(path) for p in paths):
+            reads.append((paths, df.schema, real(spark.read, *paths).schema))
+        return df
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording)
+    for _ in range(2):  # the second run merges into the first run's table
+        ev = jobs.read_events_stream(spark, sf_dir).select(
+            "user_id", "event_type", "ts", "event_id"
+        )
+        jobs.upsert_latest_per_key(
+            ev, spark, path, ["user_id"], "ts", tiebreak_cols=["event_id"], commit=commit
+        )
+    # first run: final read; second run: current read and final read
+    assert len(reads) == 3
+    for paths, declared, inferred in reads:
+        assert declared == inferred, paths
+    if commit == "rename":
+        assert reads[1][1]["_kb"].dataType.simpleString() == "int"
+
+
 def test_upsert_manifest_commit_matches_rename(spark, tmp_path, monkeypatch):
     """commit='manifest' (the object-store seam): immutable generation
     dirs + a last-writer manifest object.  Result-identical to the rename
