@@ -4,16 +4,14 @@ Queries that cross into Python on executors (mapInPandas kernels,
 applyInPandas reducers) need ``mapreduceproject_spark`` importable in the
 *worker* interpreter, not just the driver.  The driver harness loads
 ``__spark_entry__.py`` by file path from an arbitrary cwd, so workers
-can't rely on cwd-relative imports — instead we zip the package once and
-``sc.addPyFile`` it, which distributes the zip and puts it on every
-worker's sys.path (works identically on a real cluster, where workers are
-remote JVMs with no shared filesystem).
+can't rely on cwd-relative imports — instead we zip the package once per
+context and ``sc.addPyFile`` it, which distributes the zip and puts it on
+every worker's sys.path (works identically on a real cluster, where
+workers are remote JVMs with no shared filesystem).
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
 import zipfile
 from pathlib import Path
 
@@ -33,11 +31,14 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     key = sc.applicationId
     if key in _DONE:
         return
+    from mapreduceproject_spark.operators.dedup import _scratch_dir
+
     pkg_root = Path(__file__).resolve().parent
-    zip_path = Path(tempfile.gettempdir()) / f"mapreduceproject_spark_{os.getpid()}.zip"
-    if not zip_path.exists():
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for py in sorted(pkg_root.rglob("*.py")):
-                zf.write(py, arcname=str(py.relative_to(pkg_root.parent)))
+    # written fresh for each context under its Spark-owned local root: the
+    # name is unique to the context and Spark deletes it when the JVM exits
+    zip_path = Path(_scratch_dir(spark)) / "mapreduceproject_spark.zip"
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for py in sorted(pkg_root.rglob("*.py")):
+            zf.write(py, arcname=str(py.relative_to(pkg_root.parent)))
     sc.addPyFile(str(zip_path))
     _DONE.add(key)

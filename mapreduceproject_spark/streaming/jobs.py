@@ -200,58 +200,44 @@ def interval_join_attribution(events: DataFrame) -> DataFrame:
 
 def streaming_session(spark: SparkSession, state_partitions: int = 8) -> SparkSession:
     """A cloned session (shared SparkContext + catalog cache, isolated SQL
-    conf) for running one streaming job.
+    conf) for running one streaming job: the one place that sets a
+    stream's partition count.
 
-    Streams built on the clone plan against its ``shuffle.partitions``
-    without ever touching the parent's — a batch query planned concurrently
-    on the parent keeps its own parallelism.  (Mutate-and-restore on the
-    shared session was round 2's approach; the restore ran in ``finally``
-    but any concurrent batch plan inside the window silently got the
-    streaming value.)
+    Streams built on the clone plan their stateful operators at
+    ``state_partitions`` without ever touching the parent's
+    ``shuffle.partitions`` — a batch query planned concurrently on the
+    parent keeps its own parallelism.  State partitioning is per-job and
+    frozen at the first checkpoint.  The default 8 suits a finite local
+    replay: every state partition costs per-batch store/commit file I/O,
+    which dominates when state is small — a 2-store stream-stream join
+    measured 3× faster at 8 than at 32 on local[32].  A production
+    continuous job sizes this to key cardinality and executor count
+    instead (hundreds+), exactly like ``spark.sql.shuffle.partitions``
+    for batch.
     """
     s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     return s
 
 
-def run_to_df(
-    stream: DataFrame,
-    spark: SparkSession | None = None,
-    mode: str = "append",
-    state_partitions: int = 8,
-) -> DataFrame:
+def run_to_df(stream: DataFrame, mode: str = "append") -> DataFrame:
     """Execute a finite stream with AvailableNow into a memory sink and
     return the materialized result table.
 
-    ``state_partitions`` bounds the stateful-operator partition count for
-    this run (state partitioning is per-job and frozen at the first
-    checkpoint, so it is a parameter here, not a session constant).  The
-    default-8 suits a finite local replay: every state partition costs
-    per-batch store/commit file I/O, which dominates when state is small —
-    a 2-store stream-stream join measured 3× faster at 8 than at 32 on
-    local[32].  A production continuous job sizes this to key cardinality
-    and executor count instead (hundreds+), exactly like
-    ``spark.sql.shuffle.partitions`` for batch — pass it explicitly.
-
-    The conf is set on the STREAM's own session (``spark`` is accepted for
-    backwards compatibility but ignored); build the stream on
-    :func:`streaming_session` so the setting never leaks to the parent.
+    The stream plans at its own session's partition count; build it on
+    :func:`streaming_session` to choose that count without touching the
+    parent session.
     """
     sess = stream.sparkSession
     name = f"snk_{uuid.uuid4().hex[:10]}"
-    prev = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        sess.conf.set("spark.sql.shuffle.partitions", prev)
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return sess.table(name)
 
 
@@ -263,7 +249,6 @@ def upsert_latest_per_key(
     ts_col: str,
     num_buckets: int = 16,
     tiebreak_cols: list[str] | None = None,
-    commit: str = "rename",
 ) -> DataFrame:
     """foreachBatch keyed upsert: maintain the latest row per key in a
     parquet table across micro-batches.
@@ -275,32 +260,22 @@ def upsert_latest_per_key(
     per-batch cost is O(touched buckets), not O(table), and untouched
     buckets' files are never opened or replaced (byte-identical across
     batches; tests prove it).  Size ``num_buckets`` so one bucket ≈ a few
-    parquet files at the target state size.
+    parquet files at the target state size.  Each micro-batch is persisted
+    for the callback, so the source is scanned once per batch although
+    the batch feeds both the touched-bucket collect and the merge write.
 
-    Durability: each touched bucket is merged into a TEMP directory first
-    and swapped in by rename — the job never deletes files it is reading
-    (cache is not a durability guarantee: a lost executor would recompute
-    from just-deleted files), and a crash mid-swap leaves every bucket
-    either old or new, never a hole (per-bucket atomicity; buckets are
-    independent key sets, so a partial swap is still a consistent table).
-    Two commit protocols (``commit``):
-
-    * ``"rename"`` (default) — per-bucket directory swap by rename.
-      Correct where rename is atomic: local FS, HDFS.
-    * ``"manifest"`` — object-store-safe: directories are IMMUTABLE.
-      Each batch writes its merged buckets into a fresh
-      ``gen-<swap>/`` directory, then commits by writing ONE new
-      manifest object ``_manifest-<n>-<swap>.json`` mapping every
-      bucket to the generation dir that currently owns it.  Readers
-      resolve through the highest-numbered manifest, so a crash at ANY
-      point before the manifest write leaves the table exactly at the
-      previous manifest (orphan generation dirs are swept on the next
-      batch).  Nothing is ever renamed or overwritten — the manifest
-      write is a single-object PUT, which S3-class stores make atomic
-      (readers see the old object or the new one, never a torn one).
-      This is the same last-writer-manifest idea Delta/Iceberg
-      industrialize; use those when available — this seam is the
-      minimal self-contained version.
+    Durability: the one commit protocol is a per-bucket directory swap by
+    ``os.rename`` on a path the driver sees, atomic on a POSIX
+    filesystem.  Each touched bucket is merged into a TEMP directory
+    first and swapped in by rename — the job never deletes files it is
+    reading (cache is not a durability guarantee: a lost executor would
+    recompute from just-deleted files), and a crash mid-swap leaves every
+    bucket either old or new, never a hole (per-bucket atomicity; buckets
+    are independent key sets, so a partial swap is still a consistent
+    table).  The next batch restores a bucket whose swap was interrupted
+    and sweeps orphaned temp copies.  On an object store, where rename is
+    a copy, use a table format with its own commit (Delta/Iceberg MERGE
+    INTO).
 
     Ties on ``ts_col`` within a key are broken by
     ``tiebreak_cols`` (ascending); pass a column that is unique per
@@ -308,15 +283,10 @@ def upsert_latest_per_key(
     it the winner among tied rows is whichever the shuffle delivers
     first.
     """
-    import json
     import os
-    import re
     import shutil
 
     from pyspark.sql import Window
-
-    if commit not in ("rename", "manifest"):
-        raise ValueError(f"commit must be 'rename' or 'manifest', got {commit!r}")
 
     kb = F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets))
     # The table holds the stream's columns, partitioned by _kb, whose
@@ -336,136 +306,6 @@ def upsert_latest_per_key(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-
-    # ---- manifest protocol: immutable generation dirs + last-writer
-    # manifest object (see docstring) -------------------------------------
-    manifest_re = re.compile(r"^_manifest-(\d{9})-[0-9a-f]{8}\.json$")
-
-    def scan_manifests() -> tuple[int, str | None, dict[str, str], set[str], int]:
-        """(highest manifest NUMBER seen, name of the newest PARSABLE
-        manifest or None, its mapping, generation dirs referenced by ANY
-        parsable manifest, count of manifest files).  The local commit
-        below is fsync+hard-link so a torn final manifest cannot happen
-        here, but a less careful writer (or a store without atomic
-        publish) could still leave one: fall back to the next-lower
-        manifest for the mapping rather than bricking the table on
-        JSONDecodeError.  The torn file's number still counts toward the
-        return value so the next commit numbers ABOVE it (its exclusive
-        create would otherwise collide) and the post-commit GC then
-        sweeps it.  Names must match the strict pattern the writer
-        produces — a stray `_manifest-backup.json` is neither a commit
-        point nor ours to delete, so it is skipped entirely instead of
-        crashing the int parse and bricking every subsequent batch."""
-        entries: list[tuple[int, str]] = []
-        if os.path.isdir(path):
-            for entry in os.listdir(path):
-                m = manifest_re.match(entry)
-                if m:
-                    entries.append((int(m.group(1)), entry))
-        entries.sort(reverse=True)
-        newest_name: str | None = None
-        newest_map: dict[str, str] = {}
-        referenced: set[str] = set()
-        for _n, name in entries:
-            try:
-                with open(os.path.join(path, name)) as f:
-                    mp = json.load(f)
-            except (json.JSONDecodeError, OSError):
-                continue
-            if newest_name is None:
-                newest_name, newest_map = name, mp
-            referenced.update(mp.values())
-        highest = entries[0][0] if entries else 0
-        return highest, newest_name, newest_map, referenced, len(entries)
-
-    def _refuse_unparsable(n_files: int) -> None:
-        raise RuntimeError(
-            f"upsert_latest_per_key: {n_files} manifest file(s) at "
-            f"{path!r} but none parsable — refusing to treat the table "
-            f"as empty (the orphan sweep would delete every generation "
-            f"dir and silently destroy state); restore a manifest or "
-            f"clear the directory to reset the table"
-        )
-
-    def apply_batch_manifest(batch: DataFrame, _bid: int) -> None:
-        s = batch.sparkSession
-        b = batch.withColumn("_kb", kb)
-        buckets = sorted(r["_kb"] for r in b.select("_kb").distinct().collect())
-        if not buckets:
-            return
-        os.makedirs(path, exist_ok=True)
-        mn, cur_name, mapping, referenced, n_files = scan_manifests()
-        if n_files and cur_name is None:
-            # manifests exist but NONE parse: "empty mapping" here is not
-            # "empty table" — sweeping would delete every generation dir.
-            # Fail loudly instead (keep-last-2 GC below makes this state
-            # require two independent torn writes, but a single-manifest
-            # table or an external mangler can still reach it).
-            _refuse_unparsable(n_files)
-        # orphan sweep: a generation dir not referenced by ANY parsable
-        # manifest is a crashed batch's leftover (the manifest write IS
-        # the commit point) — reclaim it before writing our own.  The
-        # union (not just the newest mapping) keeps the retained previous
-        # manifest readable as a fallback: its exclusive gens survive.
-        for entry in os.listdir(path):
-            if entry.startswith("gen-") and entry not in referenced:
-                shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
-        cur_dirs = [
-            os.path.join(path, mapping[str(bk)], f"_kb={bk}")
-            for bk in buckets
-            if str(bk) in mapping
-        ]
-        if cur_dirs:
-            # leaf-dir reads carry no partition column; _kb is a pure
-            # function of the keys, so recompute instead of re-reading it
-            current = s.read.schema(stream.schema).parquet(*cur_dirs).withColumn("_kb", kb)
-            unioned = current.unionByName(b)
-        else:
-            unioned = b
-        merged = merge_latest(unioned)
-        swap = uuid.uuid4().hex[:8]
-        gen = f"gen-{swap}"
-        merged.write.mode("overwrite").partitionBy("_kb").parquet(
-            os.path.join(path, gen)
-        )
-        new_map = dict(mapping)
-        for bk in buckets:
-            if os.path.exists(os.path.join(path, gen, f"_kb={bk}")):
-                new_map[str(bk)] = gen
-        # THE commit: one new object, never an overwrite.  Locally that
-        # is fsync'd-temp + hard-link — the link is atomic AND exclusive
-        # (fails if the name exists), so readers can never observe a
-        # torn manifest, only the whole object or nothing.  On an object
-        # store the equivalent is a single PUT (atomic by store
-        # contract).  Crash before the link → table still reads as
-        # manifest mn; the gen dir and the dot-prefixed tmp are swept as
-        # orphans by the next batch's GC.
-        name = f"_manifest-{mn + 1:09d}-{swap}.json"
-        tmp = os.path.join(path, f"._manifest-tmp-{swap}.json")
-        with open(tmp, "w") as f:
-            json.dump(new_map, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.link(tmp, os.path.join(path, name))
-        os.remove(tmp)
-        # GC behind the commit: keep-last-2 — the new manifest plus the
-        # parsable predecessor we merged from (and both generation sets),
-        # so one torn/lost newest manifest still falls back to a fully
-        # readable previous state instead of an empty mapping whose next
-        # orphan sweep would destroy every bucket.  Everything older, and
-        # any well-formed-but-torn stray, is swept; non-conforming names
-        # are not ours and are left alone.
-        keep = {name} | ({cur_name} if cur_name else set())
-        alive = set(new_map.values()) | set(mapping.values())
-        for entry in os.listdir(path):
-            if manifest_re.match(entry) and entry not in keep:
-                os.remove(os.path.join(path, entry))
-            elif entry.startswith("._manifest-tmp-"):
-                # a crashed writer's pre-link temp (ours was removed
-                # right after the link above)
-                os.remove(os.path.join(path, entry))
-            elif entry.startswith("gen-") and entry not in alive:
-                shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
 
     def recover_interrupted_swap() -> None:
         # crash-recovery sweep: a swap interrupted between the two renames
@@ -497,9 +337,8 @@ def upsert_latest_per_key(
             else:
                 os.rename(src_dir, dst_dir)
 
-    def apply_batch(batch: DataFrame, _bid: int) -> None:
-        s = batch.sparkSession
-        b = batch.withColumn("_kb", kb)
+    def merge_batch(b: DataFrame) -> None:
+        s = b.sparkSession
         buckets = sorted(r["_kb"] for r in b.select("_kb").distinct().collect())
         if not buckets:
             return
@@ -543,23 +382,21 @@ def upsert_latest_per_key(
             shutil.rmtree(old, ignore_errors=True)
         shutil.rmtree(tmp, ignore_errors=True)
 
-    sink = apply_batch_manifest if commit == "manifest" else apply_batch
+    def apply_batch(batch: DataFrame, _bid: int) -> None:
+        # persisted because the batch feeds both the bucket collect and the
+        # merge write, each of which would otherwise scan the source again
+        b = batch.withColumn("_kb", kb).persist()
+        try:
+            merge_batch(b)
+        finally:
+            b.unpersist()
+
     q = (
-        stream.writeStream.foreachBatch(sink)
+        stream.writeStream.foreachBatch(apply_batch)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    if commit == "manifest":
-        _mn, cur_name, mapping, _ref, n_files = scan_manifests()
-        if n_files and cur_name is None:
-            _refuse_unparsable(n_files)
-        if not mapping:
-            return spark.createDataFrame([], schema=stream.schema)
-        dirs = [
-            os.path.join(path, g, f"_kb={bk}") for bk, g in sorted(mapping.items())
-        ]
-        return spark.read.schema(stream.schema).parquet(*dirs)
     if not os.path.exists(path):
         # zero data rows: no batch ever wrote the table — the converged
         # state is the empty table with the stream's schema

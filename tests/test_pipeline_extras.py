@@ -716,6 +716,81 @@ def test_worker_imports_keyed_by_application_id(spark):
     assert all(isinstance(k, str) for k in bootstrap._DONE)
 
 
+def test_worker_zip_is_fresh_per_context(spark, monkeypatch):
+    """A zip left at the temp dir's old per-pid name (possibly from another
+    process that had this pid) is never shipped: each context gets a fresh
+    zip of the package under its own Spark local root."""
+    import os
+    import tempfile
+    import zipfile
+
+    from mapreduceproject_spark import bootstrap
+    from mapreduceproject_spark.operators.dedup import _scratch_dir
+
+    stale = os.path.join(tempfile.gettempdir(), f"mapreduceproject_spark_{os.getpid()}.zip")
+    with zipfile.ZipFile(stale, "w") as zf:
+        zf.writestr("mapreduceproject_spark/__init__.py", "raise ImportError('stale')\n")
+    shipped = []
+    monkeypatch.setattr(bootstrap, "_DONE", set())
+    monkeypatch.setattr(spark.sparkContext, "addPyFile", shipped.append)
+    try:
+        bootstrap.ensure_worker_imports(spark)
+    finally:
+        os.remove(stale)
+    (path,) = shipped
+    assert path != stale
+    assert os.path.dirname(path) == _scratch_dir(spark)
+    pkg = os.path.dirname(bootstrap.__file__)
+    with zipfile.ZipFile(path) as zf:
+        got = zf.read("mapreduceproject_spark/bootstrap.py")
+    with open(os.path.join(pkg, "bootstrap.py"), "rb") as f:
+        assert got == f.read()
+
+
+_ZIP_SCRIPT = """
+import glob, sys
+sys.path.insert(0, {repo!r})
+from mapreduceproject_spark import bootstrap
+from mapreduceproject_spark.operators.dedup import _scratch_dir
+from mapreduceproject_spark.session import get_spark
+spark = get_spark(app_name="zip-test", master="local[1]", shuffle_partitions=1)
+bootstrap.ensure_worker_imports(spark)
+print("RESULT", *glob.glob(_scratch_dir(spark) + "/*.zip"))
+spark.stop()
+"""
+
+
+def test_worker_zip_goes_with_the_jvm(tmp_path):
+    """The package zip lives under the session's Spark local root, which
+    Spark deletes when the JVM exits: a finished process leaves no zip."""
+    import os
+    import subprocess
+    import sys
+    import time
+    from pathlib import Path
+
+    local = tmp_path / "spark-local"
+    local.mkdir()
+    repo = Path(__file__).resolve().parent.parent
+    proc = subprocess.run(
+        [sys.executable, "-c", _ZIP_SCRIPT.format(repo=str(repo))],
+        env={**os.environ, "SPARK_LOCAL_DIRS": str(local)},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    line = next(l for l in proc.stdout.splitlines() if l.startswith("RESULT"))
+    (zip_path,) = map(Path, line.split()[1:])
+    assert zip_path.parent.parent == local
+    # Spark deletes its root in a JVM shutdown hook, which may still be
+    # running when the Python process has returned
+    deadline = time.monotonic() + 60
+    while list(local.rglob("*.zip")) and time.monotonic() < deadline:
+        time.sleep(0.5)
+    assert not list(local.rglob("*.zip"))
+
+
 def test_heavy_hitters_rejects_undersized_capacity(spark):
     """A capacity that cannot guarantee the phi-superset contract must be
     rejected loudly, not silently drop true heavy hitters."""

@@ -73,11 +73,10 @@ def test_watermark_drops_late_data(spark, tmp_path):
         3000,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    from pyspark.sql import functions as F
-
+    s = jobs.streaming_session(spark)
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = (
-        spark.readStream.schema(jobs.EVENTS_RAW_SCHEMA)
+        s.readStream.schema(jobs.EVENTS_RAW_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src))
         .withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp"))
@@ -87,7 +86,6 @@ def test_watermark_drops_late_data(spark, tmp_path):
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("ws"), "n"),
-        spark,
         "append",
     )
     got = sorted((r["ws"].isoformat(), r["n"]) for r in out.collect())
@@ -100,9 +98,9 @@ def test_stateful_sessionizer_matches_builtin(spark, sf_dir):
     """Every session the custom operator emits must exactly match a
     built-in session_window session (same start/end/count); sessions still
     open at end-of-stream legitimately stay in state."""
-    ev = jobs.read_events_stream(spark, sf_dir)
+    ev = jobs.read_events_stream(jobs.streaming_session(spark), sf_dir)
     emitted = stateful.sessionize(ev, watermark_delay="0 seconds")
-    got = jobs.run_to_df(emitted, spark, "append").collect()
+    got = jobs.run_to_df(emitted, "append").collect()
     assert len(got) > 0
 
     batch = QUERIES["session_window_stats"](spark, sf_dir).collect()
@@ -124,10 +122,9 @@ def test_stateful_sessionizer_matches_builtin(spark, sf_dir):
 def test_streaming_agg_is_rerunnable(spark, sf_dir, mode):
     """run_to_df uses a fresh sink per call — the same job can run twice
     in one session (the driver calls queries repeatedly)."""
-    ev = jobs.read_events_stream(spark, sf_dir)
-    a = jobs.run_to_df(jobs.tumbling_counts(ev), spark, mode).count()
-    ev2 = jobs.read_events_stream(spark, sf_dir)
-    b = jobs.run_to_df(jobs.tumbling_counts(ev2), spark, mode).count()
+    s = jobs.streaming_session(spark)
+    a = jobs.run_to_df(jobs.tumbling_counts(jobs.read_events_stream(s, sf_dir)), mode).count()
+    b = jobs.run_to_df(jobs.tumbling_counts(jobs.read_events_stream(s, sf_dir)), mode).count()
     assert a == b > 0
 
 
@@ -219,7 +216,7 @@ def test_stream_ts_scale_matches_batch(spark, sf_dir):
     collapse and interval joins explode."""
     from mapreduceproject_spark.sources.catalog import load_table
 
-    ev = jobs.read_events_stream(spark, sf_dir)
+    ev = jobs.read_events_stream(jobs.streaming_session(spark), sf_dir)
     got = jobs.run_to_df(
         ev.groupBy().agg(
             F.min("ts").alias("mn"), F.max("ts").alias("mx"), F.count("*").alias("n")
@@ -248,8 +245,9 @@ def test_streaming_session_scopes_shuffle_conf(spark, sf_dir):
     assert spark.conf.get("spark.sql.shuffle.partitions") == parent_before
 
     ev = jobs.read_events_stream(s, sf_dir)
-    out = jobs.run_to_df(jobs.stream_dedup(ev), mode="append", state_partitions=5)
+    out = jobs.run_to_df(jobs.stream_dedup(ev), mode="append")
     assert out.count() > 0
+    assert s.conf.get("spark.sql.shuffle.partitions") == "5"
     assert spark.conf.get("spark.sql.shuffle.partitions") == parent_before
 
 
@@ -336,12 +334,10 @@ def test_stateful_running_zscore_matches_batch(spark, sf_dir):
     """The stateful per-event z-score must be bit-identical to the batch
     window twin: integer (n, sum, sumsq) state makes the math replayable
     exactly, regardless of micro-batch slicing."""
-    ev = jobs.read_events_stream(spark, sf_dir)
+    ev = jobs.read_events_stream(jobs.streaming_session(spark), sf_dir)
     got = {
         r["event_id"]: r
-        for r in jobs.run_to_df(
-            stateful.running_zscore(ev), spark, "append"
-        ).collect()
+        for r in jobs.run_to_df(stateful.running_zscore(ev), "append").collect()
     }
     batch = {
         r["event_id"]: r for r in QUERIES["running_zscore"](spark, sf_dir).collect()
@@ -464,8 +460,7 @@ def _lts_stream(spark, tmp_path, rows, subdir):
     return spark.readStream.schema(schema).parquet(str(src))
 
 
-@pytest.mark.parametrize("commit", ["rename", "manifest"])
-def test_upsert_reads_declare_the_inferred_schema(spark, sf_dir, tmp_path, monkeypatch, commit):
+def test_upsert_reads_declare_the_inferred_schema(spark, sf_dir, tmp_path, monkeypatch):
     """Every read of the upsert's own table (the per-batch current read and
     the final read) declares its schema instead of inferring it, and what
     it declares is what inference gives, the _kb partition type included."""
@@ -487,282 +482,67 @@ def test_upsert_reads_declare_the_inferred_schema(spark, sf_dir, tmp_path, monke
             "user_id", "event_type", "ts", "event_id"
         )
         jobs.upsert_latest_per_key(
-            ev, spark, path, ["user_id"], "ts", tiebreak_cols=["event_id"], commit=commit
+            ev, spark, path, ["user_id"], "ts", tiebreak_cols=["event_id"]
         )
     # first run: final read; second run: current read and final read
     assert len(reads) == 3
     for paths, declared, inferred in reads:
         assert declared == inferred, paths
-    if commit == "rename":
-        assert reads[1][1]["_kb"].dataType.simpleString() == "int"
+    assert reads[1][1]["_kb"].dataType.simpleString() == "int"
 
 
-def test_upsert_manifest_commit_matches_rename(spark, tmp_path, monkeypatch):
-    """commit='manifest' (the object-store seam): immutable generation
-    dirs + a last-writer manifest object.  Result-identical to the rename
-    protocol across an initial load + incremental batch, and — the whole
-    point — the protocol must never call os.rename/os.replace, since on
-    an S3-class store rename is a non-atomic copy+delete."""
-    import os as _os
+def test_upsert_scans_each_batch_once(spark, sf_dir, tmp_path, monkeypatch):
+    """Each micro-batch feeds both the touched-bucket collect and the merge
+    write.  The callback persists it, so the run reads every source row
+    once, and unpersists it, so no cached frame outlives the call."""
+    from pyspark.sql.streaming import DataStreamWriter
 
-    path = str(tmp_path / "state_manifest")
+    from mapreduceproject_spark.sources.catalog import load_table
 
-    real_rename = _os.rename
+    real_start = DataStreamWriter.start
+    queries = []
 
-    def no_rename(*a, **k):  # prove the protocol is rename-free
-        raise AssertionError(f"manifest commit must not rename: {a}")
+    def recording(self, *args, **kwargs):
+        q = real_start(self, *args, **kwargs)
+        queries.append(q)
+        return q
 
-    monkeypatch.setattr(_os, "rename", no_rename)
-    monkeypatch.setattr(_os, "replace", no_rename)
+    n_source = load_table(spark, sf_dir, "events").count()
+    spark.catalog.clearCache()
+    monkeypatch.setattr(DataStreamWriter, "start", recording)
+    ev = jobs.read_events_stream(jobs.streaming_session(spark), sf_dir).select(
+        "user_id", "event_type", "ts", "event_id"
+    )
+    jobs.upsert_latest_per_key(
+        ev, spark, str(tmp_path / "state"), ["user_id"], "ts", tiebreak_cols=["event_id"]
+    )
+    (q,) = queries
+    assert sum(p.numInputRows for p in q.recentProgress) == n_source > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_streaming_queries_leave_parent_partitions_alone(spark, sf_dir):
+    """Every registered streaming query sets its partition count on its
+    own cloned session: the caller's shuffle.partitions is unchanged after
+    each one, even when it differs from the streams' count."""
+    from mapreduceproject_spark.plans import streaming_queries
+
+    names = [
+        n for n, fn in QUERIES.items() if fn.__module__ == streaming_queries.__name__
+    ]
+    assert len(names) >= 10
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
     try:
-        got1 = jobs.upsert_latest_per_key(
-            _lts_stream(
-                spark,
-                tmp_path,
-                {"k": list(range(30)), "ts": [1] * 30, "v": [10] * 30},
-                "m1",
-            ),
-            spark,
-            path,
-            ["k"],
-            "ts",
-            num_buckets=8,
-            commit="manifest",
-        )
-        assert got1.count() == 30
-        got2 = jobs.upsert_latest_per_key(
-            _lts_stream(spark, tmp_path, {"k": [7], "ts": [2], "v": [99]}, "m2"),
-            spark,
-            path,
-            ["k"],
-            "ts",
-            num_buckets=8,
-            commit="manifest",
-        )
+        for name in names:
+            QUERIES[name](spark, sf_dir).count()
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "3", name
     finally:
-        monkeypatch.setattr(_os, "rename", real_rename)
-    rows = {r["k"]: r["v"] for r in got2.collect()}
-    assert rows[7] == 99 and len(rows) == 30
-    # keep-last-2 GC: the live manifest plus its parsable predecessor
-    # (the fallback), and every gen dir EITHER references exists
-    manifests = sorted(e for e in os.listdir(path) if e.startswith("_manifest-"))
-    assert len(manifests) == 2
-    import json
-
-    for m in manifests:
-        mapping = json.load(open(os.path.join(path, m)))
-        assert mapping and all(
-            os.path.isdir(os.path.join(path, g)) for g in set(mapping.values())
-        )
-
-
-def test_upsert_manifest_crash_before_commit_preserves_state(spark, tmp_path):
-    """A batch that dies AFTER writing its generation dir but BEFORE the
-    manifest object (the only commit point) must leave the table exactly
-    at the previous manifest; the orphan gen dir is swept by the next
-    successful batch."""
-    path = str(tmp_path / "state_crash")
-    got1 = jobs.upsert_latest_per_key(
-        _lts_stream(
-            spark, tmp_path, {"k": [0, 1, 2], "ts": [1, 1, 1], "v": [5, 6, 7]}, "c1"
-        ),
-        spark,
-        path,
-        ["k"],
-        "ts",
-        num_buckets=4,
-        commit="manifest",
-    )
-    assert got1.count() == 3
-    # simulate the crashed batch: an orphan generation dir, no manifest
-    orphan = os.path.join(path, "gen-deadbeef")
-    os.makedirs(os.path.join(orphan, "_kb=0"))
-    with open(os.path.join(orphan, "_kb=0", "junk.parquet"), "wb") as f:
-        f.write(b"not parquet")
-    # reader resolves through the manifest: orphan is invisible
-    rows = {r["k"]: r["v"] for r in _read_manifest_table(spark, path).collect()}
-    assert rows == {0: 5, 1: 6, 2: 7}
-    # next batch sweeps the orphan and commits normally
-    got2 = jobs.upsert_latest_per_key(
-        _lts_stream(spark, tmp_path, {"k": [1], "ts": [2], "v": [60]}, "c2"),
-        spark,
-        path,
-        ["k"],
-        "ts",
-        num_buckets=4,
-        commit="manifest",
-    )
-    rows = {r["k"]: r["v"] for r in got2.collect()}
-    assert rows == {0: 5, 1: 60, 2: 7}
-    assert not os.path.exists(orphan)
-
-
-def test_upsert_manifest_torn_highest_manifest_recovers(spark, tmp_path):
-    """A torn (half-written) HIGHEST-numbered manifest — a crashed writer
-    without the fsync+link discipline, or a store that tears writes —
-    must not brick the table: the reader falls back to the newest
-    parsable manifest, the next commit numbers ABOVE the torn file
-    (whose name would otherwise collide with an exclusive create), and
-    the post-commit GC sweeps it."""
-    import json as _json
-
-    path = str(tmp_path / "state_torn")
-    got1 = jobs.upsert_latest_per_key(
-        _lts_stream(
-            spark, tmp_path, {"k": [0, 1, 2], "ts": [1, 1, 1], "v": [5, 6, 7]}, "m1"
-        ),
-        spark,
-        path,
-        ["k"],
-        "ts",
-        num_buckets=4,
-        commit="manifest",
-    )
-    assert got1.count() == 3
-    live = [e for e in os.listdir(path) if e.startswith("_manifest-")]
-    assert len(live) == 1
-    mn = int(live[0].split("-")[1])
-    torn = os.path.join(path, f"_manifest-{mn + 1:09d}-deadbeef.json")
-    with open(torn, "w") as f:
-        f.write('{"0": "gen-dead')  # truncated mid-dump
-    # also an orphan pre-link temp from the same imagined crash
-    with open(os.path.join(path, "._manifest-tmp-deadbeef.json"), "w") as f:
-        f.write("{}")
-    # next batch reads through the PARSABLE manifest (state intact)...
-    got2 = jobs.upsert_latest_per_key(
-        _lts_stream(spark, tmp_path, {"k": [1], "ts": [2], "v": [60]}, "m2"),
-        spark,
-        path,
-        ["k"],
-        "ts",
-        num_buckets=4,
-        commit="manifest",
-    )
-    rows = {r["k"]: r["v"] for r in got2.collect()}
-    assert rows == {0: 5, 1: 60, 2: 7}
-    # ...commits above the torn number, sweeps it + the orphan temp, and
-    # keeps the parsable predecessor as the fallback (keep-last-2)
-    left = sorted(
-        e
-        for e in os.listdir(path)
-        if e.startswith(("_manifest-", "._manifest-tmp-"))
-    )
-    assert [int(e.split("-")[1]) for e in left] == [mn, mn + 2]
-    for e in left:
-        _json.load(open(os.path.join(path, e)))  # both parsable
-
-
-def test_upsert_manifest_all_torn_refuses_and_preserves_gens(spark, tmp_path):
-    """When manifest files exist but NONE parse, the table state is
-    unknowable — the next batch must FAIL LOUDLY and leave every
-    generation dir in place, never orphan-sweep them as if the table
-    were empty (that would silently destroy all untouched buckets)."""
-    import pytest
-
-    path = str(tmp_path / "state_allton")
-    jobs.upsert_latest_per_key(
-        _lts_stream(
-            spark, tmp_path, {"k": [0, 1, 2], "ts": [1, 1, 1], "v": [5, 6, 7]}, "a1"
-        ),
-        spark,
-        path,
-        ["k"],
-        "ts",
-        num_buckets=4,
-        commit="manifest",
-    )
-    gens_before = sorted(e for e in os.listdir(path) if e.startswith("gen-"))
-    assert gens_before
-    # mangle EVERY manifest in place (external corruption / torn writes)
-    for e in os.listdir(path):
-        if e.startswith("_manifest-"):
-            with open(os.path.join(path, e), "w") as f:
-                f.write('{"0": "gen-')
-    # the RuntimeError surfaces through awaitTermination wrapped in
-    # StreamingQueryException; match on the message instead of the type
-    with pytest.raises(Exception, match="none parsable"):
-        jobs.upsert_latest_per_key(
-            _lts_stream(spark, tmp_path, {"k": [1], "ts": [2], "v": [60]}, "a2"),
-            spark,
-            path,
-            ["k"],
-            "ts",
-            num_buckets=4,
-            commit="manifest",
-        )
-    # nothing was swept: state is recoverable by restoring a manifest
-    assert sorted(e for e in os.listdir(path) if e.startswith("gen-")) == gens_before
-
-
-def test_upsert_manifest_stray_nonconforming_file_ignored(spark, tmp_path):
-    """A stray file matching the loose `_manifest-*.json` prefix but not
-    the writer's strict name pattern (e.g. `_manifest-backup.json`) must
-    neither crash the number parse nor be deleted by GC — it is not ours."""
-    path = str(tmp_path / "state_stray")
-    jobs.upsert_latest_per_key(
-        _lts_stream(spark, tmp_path, {"k": [0, 1], "ts": [1, 1], "v": [5, 6]}, "s1"),
-        spark,
-        path,
-        ["k"],
-        "ts",
-        num_buckets=4,
-        commit="manifest",
-    )
-    stray = os.path.join(path, "_manifest-backup.json")
-    with open(stray, "w") as f:
-        f.write("user notes, not json")
-    got = jobs.upsert_latest_per_key(
-        _lts_stream(spark, tmp_path, {"k": [1], "ts": [2], "v": [60]}, "s2"),
-        spark,
-        path,
-        ["k"],
-        "ts",
-        num_buckets=4,
-        commit="manifest",
-    )
-    rows = {r["k"]: r["v"] for r in got.collect()}
-    assert rows == {0: 5, 1: 60}
-    assert os.path.exists(stray)  # ignored, not GC'd
-
-
-def test_upsert_manifest_lost_newest_falls_back_to_previous(spark, tmp_path):
-    """keep-last-2 is what makes torn-newest recovery real: after losing
-    the newest manifest entirely, the retained predecessor must still
-    resolve — every generation dir it references survived GC."""
-    path = str(tmp_path / "state_fallback")
-    for i, (ks, ts, vs) in enumerate(
-        [([0, 1, 2], [1, 1, 1], [5, 6, 7]), ([1], [2], [60])]
-    ):
-        jobs.upsert_latest_per_key(
-            _lts_stream(
-                spark, tmp_path, {"k": ks, "ts": ts, "v": vs}, f"fb{i}"
-            ),
-            spark,
-            path,
-            ["k"],
-            "ts",
-            num_buckets=4,
-            commit="manifest",
-        )
-    manifests = sorted(e for e in os.listdir(path) if e.startswith("_manifest-"))
-    assert len(manifests) == 2
-    os.remove(os.path.join(path, manifests[-1]))  # lose the newest
-    # previous manifest resolves to batch-1 state (documented degradation)
-    rows = {r["k"]: r["v"] for r in _read_manifest_table(spark, path).collect()}
-    assert rows == {0: 5, 1: 6, 2: 7}
-
-
-def _read_manifest_table(spark, path):
-    import json
-
-    manifests = sorted(e for e in os.listdir(path) if e.startswith("_manifest-"))
-    mapping = json.load(open(os.path.join(path, manifests[-1])))
-    dirs = [os.path.join(path, g, f"_kb={bk}") for bk, g in sorted(mapping.items())]
-    return spark.read.parquet(*dirs)
+        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 def test_upsert_rename_recovery_sweeps_orphan_tmp(spark, tmp_path):
-    """A killed rename-mode job can leave a full merged copy of the
+    """A killed upsert can leave a full merged copy of the
     touched buckets at '{path}.tmp-<swap>' (a sibling of the table).  The
     next batch's recovery sweep must reclaim it."""
     path = str(tmp_path / "state_tmpsweep")
