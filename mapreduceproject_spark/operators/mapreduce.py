@@ -15,8 +15,9 @@ juice = groupBy(key) → applyInPandas (full-group reducer, exactly the
 reference's "exe sees every value at once" contract) or a builtin
 aggregate when the reducer is algebraic (then Catalyst adds the partial/
 final split the reference never had).  ``num_tasks`` maps to an explicit
-``repartition(num_tasks, key)`` — the analogue of num_maples/num_juices,
-except oversizing is safe because AQE coalesces.
+``repartition(num_tasks, key)`` — the analogue of num_maples/num_juices.
+AQE never coalesces that exchange, so exactly ``num_tasks`` reduce tasks
+run: oversizing costs one task per empty partition.
 
 Intentional upgrades over the reference (documented divergences, §7.4.3-4):
 - values may contain spaces (the reference truncates at the first space,

@@ -52,6 +52,24 @@ Spark classes the driver JVM loaded, never data, plans or results.
   checkout is not writable.
 The flags go in ``spark.driver.defaultJavaOptions``, so a caller's
 ``spark.driver.extraJavaOptions`` still applies.
+
+No-fork local filesystem.  With no libhadoop loaded, Hadoop's
+``RawLocalFileSystem.setPermission`` forks ``chmod`` for every file,
+``.crc`` sidecar and directory a write, a streaming checkpoint or a
+state-store commit creates.  When ``get_spark`` launches the
+JVM for a ``local*`` master, it puts ``jvm/NoForkLocalFileSystem.java``,
+compiled once with ``javac`` against ``hadoop-client-api`` into
+``.jvm-cds/nofork-<key>.jar``, on the driver and executor class paths
+(after a caller's ``extraClassPath``), and binds it as ``fs.file.impl``
+and ``fs.AbstractFileSystem.file.impl`` (``FileContext``, which
+checkpoints use) unless the caller binds those.  It is the checksummed
+``LocalFileSystem``; only ``setPermission`` changes, setting the same
+9-bit mode in-process, so outputs, modes, ``.crc`` files and the commit
+protocol are unchanged.  The jar key hashes the source, the ``javac`` and
+the hadoop jar's name and size; the archive key includes the jar's name,
+size and mtime, since the archive records the class path.  Skipped for
+other masters, with no ``javac`` on ``PATH``, when the jar can be neither
+found nor written, and when no JVM is launched here.
 """
 
 from __future__ import annotations
@@ -62,6 +80,9 @@ import os
 import re
 import shutil
 import subprocess
+import tempfile
+import zipfile
+from glob import glob
 from pathlib import Path
 
 from pyspark import SparkContext
@@ -80,6 +101,8 @@ _CDS_LOG = "-Xlog:cds*=off -Xlog:cds=error,cds+dynamic=warning:stderr"
 _DUMP_WAIT_S = 120
 # (gateway process, temp archive) for each JVM this process asked to write
 _dumps: list[tuple[subprocess.Popen, Path]] = []
+_NOFORK_SRC = Path(__file__).resolve().parent / "jvm" / "NoForkLocalFileSystem.java"
+_NOFORK_FS = "mapreduceproject_spark.jvm.NoForkLocalFileSystem"
 
 
 def get_spark(
@@ -90,10 +113,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
-    ``shuffle_partitions`` is the maple/juice ``num_tasks`` analogue; AQE
-    will coalesce below it when partitions come out small, so oversizing is
-    safe — the opposite of the reference, where num_tasks > live nodes is
-    rejected (/root/reference/src/master.go:363-371).
+    ``shuffle_partitions`` is the default width of a ``groupBy`` or join
+    shuffle, and AQE coalesces below it when partitions come out small.  A
+    maple/juice ``num_tasks`` is not coalesced: it is an explicit
+    ``repartition(num_tasks, key)``, so exactly that many reduce tasks run
+    (the reference rejects num_tasks > live nodes, src/master.go:363-371).
     """
     master = master or f"local[{DEFAULT_CPUS}]"
     builder = (
@@ -124,7 +148,15 @@ def get_spark(
             "spark.python.daemon.module", "mapreduceproject_spark._pyworker"
         ).config("spark.executorEnv.PYTHONPATH", str(Path(__file__).resolve().parent.parent))
     conf = dict(extra_conf or {})
-    launch = _cds_launch(conf) if SparkContext._gateway is None else None
+    launch = jar = None
+    if SparkContext._gateway is None and not os.environ.get("PYSPARK_GATEWAY_PORT"):
+        jar = _nofork_jar() if master.startswith("local") else None
+        launch = _cds_launch(conf, jar)
+    if jar is not None:
+        for k in ("spark.driver.extraClassPath", "spark.executor.extraClassPath"):
+            conf[k] = os.pathsep.join(filter(None, (conf.get(k), str(jar))))
+        conf.setdefault("spark.hadoop.fs.file.impl", _NOFORK_FS)
+        conf.setdefault("spark.hadoop.fs.AbstractFileSystem.file.impl", f"{_NOFORK_FS}$Fs")
     flags, dump = launch or (None, None)
     if flags:
         conf["spark.driver.defaultJavaOptions"] = " ".join(
@@ -170,18 +202,56 @@ def _java_home() -> Path | None:
     return home if m and int(m.group(1)) >= 13 else None
 
 
-def _archive_key(home: Path, spark_home: str) -> str:
+def _nofork_jar() -> Path | None:
+    """The compiled no-fork filesystem jar, built and published on first
+    use; None when it cannot be built (module docstring)."""
+    javac = shutil.which("javac")
+    apis = sorted(glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar")))
+    if javac is None or not apis:
+        return None
+    api = apis[-1]
+    try:
+        javac = os.path.realpath(javac)
+        st = os.stat(javac)
+        h = hashlib.sha256(_NOFORK_SRC.read_bytes())
+        h.update(repr((javac, st.st_size, st.st_mtime_ns, os.path.basename(api), os.stat(api).st_size)).encode())
+        jar = CDS_DIR / f"nofork-{h.hexdigest()[:16]}.jar"
+        if jar.is_file():
+            return jar
+        CDS_DIR.mkdir(exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=CDS_DIR, prefix=".nofork-") as tmp:
+            out = Path(tmp)
+            subprocess.run(
+                [javac, "--release", "8", "-Xlint:-options", "-cp", api, "-d", tmp, str(_NOFORK_SRC)],
+                check=True, capture_output=True, timeout=120,
+            )
+            with zipfile.ZipFile(out / jar.name, "w") as z:
+                for cls in sorted(out.rglob("*.class")):
+                    z.write(cls, cls.relative_to(out).as_posix())
+            os.replace(out / jar.name, jar)
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return jar
+
+
+def _archive_key(home: Path, spark_home: str, jar: Path | None = None) -> str:
     st = (home / "lib" / "modules").stat()
     h = hashlib.sha256(repr((str(home), st.st_size, st.st_mtime_ns, str(CDS_DIR))).encode())
     with os.scandir(os.path.join(spark_home, "jars")) as it:
         for name, size in sorted((e.name, e.stat().st_size) for e in it):
             h.update(f"{name}\0{size}\n".encode())
+    if jar is not None:
+        # on the recorded class path: the JVM rejects the archive when this
+        # jar's size or mtime changes
+        st = jar.stat()
+        h.update(f"{jar.name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
     return h.hexdigest()[:16]
 
 
-def _cds_launch(conf: dict[str, str]) -> tuple[str, Path | None] | None:
+def _cds_launch(conf: dict[str, str], jar: Path | None = None) -> tuple[str, Path | None] | None:
     """JVM flags that map or write the archive, and the temp file a write
-    goes to; None when the launch cannot use an archive (module docstring)."""
+    goes to; None when the launch cannot use an archive (module docstring).
+    ``jar`` is the no-fork filesystem jar the launch puts on the class path."""
     if "spark.driver.extraClassPath" in conf or any(
         os.environ.get(v)
         for v in ("PYSPARK_GATEWAY_PORT", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
@@ -195,7 +265,7 @@ def _cds_launch(conf: dict[str, str]) -> tuple[str, Path | None] | None:
     if os.path.isdir(real_conf) and not all(n.endswith(".template") for n in os.listdir(real_conf)):
         return None
     try:
-        key = _archive_key(home, spark_home)
+        key = _archive_key(home, spark_home, jar)
         (CDS_DIR / "conf").mkdir(parents=True, exist_ok=True)
         if os.listdir(CDS_DIR / "conf") or not os.access(CDS_DIR, os.W_OK):
             return None

@@ -18,6 +18,7 @@ engine-exact (floor(value*100) on identical doubles).
 from __future__ import annotations
 
 import uuid
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -260,9 +261,11 @@ def upsert_latest_per_key(
     per-batch cost is O(touched buckets), not O(table), and untouched
     buckets' files are never opened or replaced (byte-identical across
     batches; tests prove it).  Size ``num_buckets`` so one bucket ≈ a few
-    parquet files at the target state size.  Each micro-batch is persisted
-    for the callback, so the source is scanned once per batch although
-    the batch feeds both the touched-bucket collect and the merge write.
+    parquet files at the target state size.  The buckets a batch swaps are
+    the ``_kb=`` directories of its merge write.  Only a batch merging into
+    an existing table also collects its distinct ``_kb`` values, to prune
+    the current-table read; that batch is persisted, so the source is
+    scanned once although it feeds both the collect and the merge write.
 
     Durability: the one commit protocol is a per-bucket directory swap by
     ``os.rename`` on a path the driver sees, atomic on a POSIX
@@ -277,6 +280,10 @@ def upsert_latest_per_key(
     a copy, use a table format with its own commit (Delta/Iceberg MERGE
     INTO).
 
+    ``path`` is a driver-local path or a ``file:`` URI; another scheme
+    raises ``ValueError`` before the stream starts, since the swap renames
+    with ``os``.
+
     Ties on ``ts_col`` within a key are broken by
     ``tiebreak_cols`` (ascending); pass a column that is unique per
     event (an id) whenever same-timestamp rows are possible — without
@@ -288,6 +295,7 @@ def upsert_latest_per_key(
 
     from pyspark.sql import Window
 
+    path = _local_path(path)
     kb = F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets))
     # The table holds the stream's columns, partitioned by _kb, whose
     # small non-negative values partition discovery types as int.  Every
@@ -339,9 +347,6 @@ def upsert_latest_per_key(
 
     def merge_batch(b: DataFrame) -> None:
         s = b.sparkSession
-        buckets = sorted(r["_kb"] for r in b.select("_kb").distinct().collect())
-        if not buckets:
-            return
         recover_interrupted_swap()
         # explicit existence check, NOT a bare except: a transient read
         # failure (corrupt footer, FS hiccup) must FAIL the batch and
@@ -351,6 +356,11 @@ def upsert_latest_per_key(
         if os.path.exists(path) and any(
             e.startswith("_kb=") for e in os.listdir(path)
         ):
+            # persisted because the batch feeds both the bucket collect and
+            # the merge write, each of which would otherwise scan the
+            # source again
+            b.persist()
+            buckets = [r["_kb"] for r in b.select("_kb").distinct().collect()]
             current = (
                 s.read.schema(table_schema)
                 .parquet(path)
@@ -363,29 +373,27 @@ def upsert_latest_per_key(
         swap = uuid.uuid4().hex[:8]
         tmp = f"{path}.tmp-{swap}"
         merged.write.mode("overwrite").partitionBy("_kb").parquet(tmp)
-        os.makedirs(path, exist_ok=True)
-        for bk in buckets:
-            src_dir = os.path.join(tmp, f"_kb={bk}")
-            if not os.path.exists(src_dir):
-                continue
-            dst_dir = os.path.join(path, f"_kb={bk}")
+        # every bucket of the merge write is a touched bucket
+        touched = sorted(e for e in os.listdir(tmp) if e.startswith("_kb="))
+        if touched:
+            os.makedirs(path, exist_ok=True)
+        for bk_name in touched:
+            dst_dir = os.path.join(path, bk_name)
             # the saved-old dir is dot-prefixed so Spark's file listing
             # never discovers it as a partition value (a sibling named
             # '_kb=3.old-…' would be parsed as partition value
             # '3.old-…' and corrupt the _kb column's inferred type);
             # recover_interrupted_swap() restores it if we crash between
             # the two renames.
-            old = os.path.join(path, f".old-{swap}-_kb={bk}")
+            old = os.path.join(path, f".old-{swap}-{bk_name}")
             if os.path.exists(dst_dir):
                 os.rename(dst_dir, old)
-            os.rename(src_dir, dst_dir)
+            os.rename(os.path.join(tmp, bk_name), dst_dir)
             shutil.rmtree(old, ignore_errors=True)
         shutil.rmtree(tmp, ignore_errors=True)
 
     def apply_batch(batch: DataFrame, _bid: int) -> None:
-        # persisted because the batch feeds both the bucket collect and the
-        # merge write, each of which would otherwise scan the source again
-        b = batch.withColumn("_kb", kb).persist()
+        b = batch.withColumn("_kb", kb)
         try:
             merge_batch(b)
         finally:
@@ -402,6 +410,20 @@ def upsert_latest_per_key(
         # state is the empty table with the stream's schema
         return spark.createDataFrame([], schema=stream.schema)
     return spark.read.schema(table_schema).parquet(path).drop("_kb")
+
+
+def _local_path(path: str) -> str:
+    """``path`` with a ``file:`` scheme (and an empty or ``localhost``
+    authority) dropped; ValueError for any other scheme."""
+    u = urlsplit(path)
+    if not u.scheme:
+        return path
+    if u.scheme != "file" or u.netloc not in ("", "localhost"):
+        raise ValueError(f"not a driver-local path: {path!r}")
+    # the rest as written: Hadoop, which Spark's write goes through, reads
+    # '?' and '#' in a path literally
+    rest = path.split(":", 1)[1]
+    return rest[2 + len(u.netloc):] if rest.startswith("//") else rest
 
 
 def _hadoop_fs(spark: SparkSession, path: str):

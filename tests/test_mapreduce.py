@@ -33,6 +33,19 @@ def python_wordcount(lines):
     return dict(c)
 
 
+def test_num_tasks_is_honoured_exactly(spark, corpus):
+    """num_tasks is an explicit repartition(num_tasks, key): AQE never
+    coalesces it, so a tiny input still runs num_tasks reduce partitions,
+    more than the session's shuffle width and than its cores."""
+    path, lines = corpus
+    kv = mr.maple(mr.read_lines(spark, path), lambda l: ((w, "1") for w in l.split()))
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for juiced in (mr.juice(kv, lambda k, vs: str(len(vs)), num_tasks=4 * width),
+                   mr.juice_algebraic(kv, F.count("*").cast("string"), num_tasks=4 * width)):
+        assert juiced.rdd.getNumPartitions() == 4 * width
+        assert {r["key"]: int(r["value"]) for r in juiced.collect()} == python_wordcount(lines)
+
+
 def test_maple_juice_function_path_wordcount(spark, corpus):
     path, lines = corpus
     kv = mr.maple(mr.read_lines(spark, path), lambda l: ((w, "1") for w in l.split()))

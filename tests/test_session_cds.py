@@ -42,8 +42,8 @@ _KEY = """
 import sys
 sys.path.insert(0, {root!r})
 from pyspark.find_spark_home import _find_spark_home
-from mapreduceproject_spark.session import _archive_key, _java_home
-print(_archive_key(_java_home(), _find_spark_home()))
+from mapreduceproject_spark.session import _archive_key, _java_home, _nofork_jar
+print(_archive_key(_java_home(), _find_spark_home(), _nofork_jar()))
 """
 
 
@@ -129,11 +129,12 @@ def test_mismatched_archive_falls_back_quietly(published, tmp_path):
     # rejects it and starts without one
     (theirs,) = _archives(published)
     root = _copy(tmp_path)
+    # the key a local session uses (it compiles the copy's no-fork jar)
     key = subprocess.run(
         [sys.executable, "-c", _KEY.format(root=str(root))],
         capture_output=True, text=True, check=True, env=_env(),
     ).stdout.strip()
-    (root / ".jvm-cds").mkdir()
+    (root / ".jvm-cds").mkdir(exist_ok=True)
     mine = root / ".jvm-cds" / f"{key}-{theirs.stat().st_size}.jsa"
     shutil.copyfile(theirs, mine)
     out, proc = _run(root)

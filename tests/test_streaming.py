@@ -568,6 +568,49 @@ def test_upsert_rename_recovery_sweeps_orphan_tmp(spark, tmp_path):
     assert not os.path.exists(orphan)
 
 
+def _max_job_id(spark) -> int:
+    jobs_list = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return max([jobs_list.apply(i).jobId() for i in range(jobs_list.size())] + [-1])
+
+
+def test_upsert_first_batch_makes_no_bucket_collect(spark, tmp_path):
+    """A batch with no table to merge into takes the buckets it swaps from
+    its merge write's _kb= directories: no distinct-_kb collect and no
+    persist.  The call runs the merge write (the window shuffle's map stage
+    and the write) and nothing else."""
+    stream = _lts_stream(spark, tmp_path, {"k": list(range(20)), "ts": [1] * 20, "v": [3] * 20}, "f1")
+    before = _max_job_id(spark)
+    jobs.upsert_latest_per_key(stream, spark, str(tmp_path / "state"), ["k"], "ts", num_buckets=4)
+    assert 1 <= _max_job_id(spark) - before <= 2
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_upsert_accepts_file_uri(spark, tmp_path):
+    """A file: URI names the same table as its plain path, and the swap
+    leaves no .tmp- copy behind."""
+    rows = {"k": [0, 1, 2, 1], "ts": [1, 1, 1, 2], "v": [5, 6, 7, 8]}
+    got = {}
+    for name, path in (("plain", str(tmp_path / "plain")),
+                       ("uri", (tmp_path / "uri").as_uri())):
+        out = jobs.upsert_latest_per_key(
+            _lts_stream(spark, tmp_path, rows, f"src_{name}"), spark, path, ["k"], "ts", num_buckets=4
+        )
+        got[name] = sorted(tuple(r) for r in out.collect())
+    assert got["uri"] == got["plain"] and len(got["uri"]) == 3
+    assert os.path.isdir(tmp_path / "uri")
+    assert not [e for e in os.listdir(tmp_path) if ".tmp-" in e]
+
+
+def test_upsert_rejects_a_non_local_scheme(spark, tmp_path):
+    """The swap renames with os: a path the driver cannot rename is
+    refused before the stream starts, leaving nothing behind."""
+    stream = _lts_stream(spark, tmp_path, {"k": [0], "ts": [1], "v": [5]}, "h1")
+    with pytest.raises(ValueError, match="driver-local"):
+        jobs.upsert_latest_per_key(stream, spark, "hdfs://nn:8020/state", ["k"], "ts")
+    assert not spark.streams.active
+    assert sorted(os.listdir(tmp_path)) == ["h1"]
+
+
 # -- streaming ingest near-dup gate (round 6) ---------------------------------
 
 
