@@ -721,6 +721,35 @@ def test_tpch_rebuild_starts_no_job(spark, sf_dir):
     )
 
 
+# py4j commands the main thread may send to rebuild the six tpch plans.
+# They send about 800 on a get_spark session, and about 2,000 when each
+# Column call captures its Python call site (dataFrameDebugging enabled).
+TPCH_REBUILD_PY4J_CEILING = 1100
+
+
+def test_tpch_rebuild_py4j_round_trip_budget(spark, sf_dir, monkeypatch):
+    import threading
+
+    for name in TPCH_BENCH_QUERIES:
+        QUERIES[name](spark, sf_dir)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    main = threading.get_ident()
+    sent: list[str] = []
+
+    def recording(command, *args, **kwargs):
+        if threading.get_ident() == main:
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", recording)
+    for name in TPCH_BENCH_QUERIES:
+        QUERIES[name](spark, sf_dir)
+    monkeypatch.undo()
+    assert not [c for c in sent if "PySparkCurrentOrigin" in c]
+    assert 0 < len(sent) <= TPCH_REBUILD_PY4J_CEILING, len(sent)
+
+
 def test_ann_operator_build_starts_no_job(spark, sf_dir):
     # building an ANN plan is lazy: no count or collect runs before the
     # caller's sink.  pq_topk is left out on purpose: pq_codebooks trains

@@ -54,7 +54,7 @@ def test_rrf_score_recomputes_from_ranks(spark, sf_dir):
         assert 1 <= r["rnk"] <= RRF_TOP
 
 
-def test_seasonal_outlier_hand_truth(spark):
+def test_seasonal_outlier_hand_truth(spark, tmp_path):
     """Six events in one (type, dow, hour) cell, one wildly off — the
     planted spike must rank first with the textbook z value."""
     base = [(i, "2024-01-08 05:%02d:00" % i, 10.0) for i in range(5)]
@@ -63,9 +63,7 @@ def test_seasonal_outlier_hand_truth(spark):
         [(i, ts, "click", v) for i, ts, v in rows],
         "event_id long, ts string, event_type string, value double",
     ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="seasonal_")
+    d = str(tmp_path)
     df.write.mode("overwrite").parquet(f"{d}/events.parquet")
     out = QUERIES["seasonal_residual_outliers"](spark, d).collect()
     assert out[0]["event_id"] == 5
@@ -107,13 +105,11 @@ def test_top_p_selection_is_quality_prefix_per_source(spark, sf_dir):
             cum += int(row["n_tokens"])
 
 
-def test_bigram_surprisal_hand_truth(spark):
+def test_bigram_surprisal_hand_truth(spark, tmp_path):
     """Corpus of one document 'a b a b': bigrams ab, ba, ab.
     c(a,b)=2 head(a)=2; c(b,a)=1 head(b)=1; V=2 continuations.
     p(b|a)=(2+.5)/(2+.5*2)=2.5/3; p(a|b)=(1+.5)/(1+.5*2)=.75."""
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="surp_")
+    d = str(tmp_path)
     spark.createDataFrame(
         [(0, "a b a b")], "doc_id long, text string"
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
