@@ -14,10 +14,14 @@ from __future__ import annotations
 
 import zipfile
 from pathlib import Path
+from weakref import WeakKeyDictionary
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 _DONE: set[str] = set()
+# each live Python SparkContext's applicationId, looked up once
+_APP_IDS: WeakKeyDictionary[SparkContext, str] = WeakKeyDictionary()
 
 
 def ensure_worker_imports(spark: SparkSession) -> None:
@@ -28,7 +32,12 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     # which would silently skip addPyFile and strand every Arrow-kernel
     # query on workers with ModuleNotFoundError.  applicationId is unique
     # per context (local-<epoch-ms> locally, cluster-assigned on YARN/k8s).
-    key = sc.applicationId
+    # Its lookup costs two py4j round trips, so it is cached per context
+    # object; the cache is weak, so a dead context's entry is gone before
+    # its address can be reused.
+    key = _APP_IDS.get(sc)
+    if key is None:
+        key = _APP_IDS[sc] = sc.applicationId
     if key in _DONE:
         return
     from mapreduceproject_spark.operators.dedup import _scratch_dir

@@ -18,11 +18,9 @@ Scale posture (100 TB mindset, tested on local[32]):
   each call it looks up the active session and ``PySparkCurrentOrigin`` in
   the JVM, reads a conf, sets and clears the origin and walks the Python
   stack: about 9 py4j round trips that only put a ``file:line`` into error
-  messages.  Without them the six tpch plan builds send 814 py4j commands
-  instead of 2,044 and ``F.col`` costs 0.12 ms instead of 0.46 ms.  Errors
-  keep their error class and message (``DIVIDE_BY_ZERO``), but their
-  ``== DataFrame ==`` block names a JVM frame, not the Python line.  To get
-  the line back, pass
+  messages.  Errors keep their error class and message
+  (``DIVIDE_BY_ZERO``), but their ``== DataFrame ==`` block names a JVM
+  frame, not the Python line.  To get the line back, pass
   ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``.
   PySpark reads the flag once per process, from the active session at the
   first ``Column`` call, so it has to be in the builder conf; a later
@@ -35,6 +33,23 @@ Scale posture (100 TB mindset, tested on local[32]):
   goes on the executors' ``PYTHONPATH`` so the daemon module is found
   before any ``addPyFile``.  Other masters keep ``pyspark.daemon``: there
   the module would have to be shipped at submit time.
+- No per-key source records in the context's Hadoop conf.  Hadoop's
+  ``Configuration`` keeps, for each of its ~1,100 keys, the names of the
+  XML files that set it (its private ``updatingResource`` map), and
+  ``Configuration.write`` gzips each name on its own.  Every shipped copy
+  pays for that: a write task carries two (the write job description and
+  its stats tracker), and a file scan broadcasts one.  The records are
+  diagnostics only: Hadoop's XML and JSON dumps read them, and so does
+  Spark's environment listing, which is posted at startup.  So once the
+  session exists, ``get_spark`` replaces the map with an empty one, on
+  every master.  Every key and value stays; each copy then records only
+  the keys set in code after that, and ``getPropertySources`` returns null
+  for a key an XML file set.  The FileSystem implementations are loaded
+  and the conf's properties read first: the HDFS filesystem registers
+  ``hdfs-default.xml`` and its other default resources when it loads, and
+  registering a default resource later reloads every ``Configuration``,
+  which records every source again.  On a Hadoop without that field the
+  records are kept.
 
 Session start maps a JVM class-data archive (JDK 13+ dynamic AppCDS)
 kept in ``.jvm-cds/`` at the checkout root.  It holds only the JDK and
@@ -104,6 +119,7 @@ import zipfile
 from glob import glob
 from pathlib import Path
 
+from py4j.protocol import Py4JError
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
@@ -122,6 +138,8 @@ _DUMP_WAIT_S = 120
 _dumps: list[tuple[subprocess.Popen, Path]] = []
 _NOFORK_SRC = Path(__file__).resolve().parent / "jvm" / "NoForkLocalFileSystem.java"
 _NOFORK_FS = "mapreduceproject_spark.jvm.NoForkLocalFileSystem"
+# Hadoop Configuration's private map of each key's source resources
+_SOURCES_FIELD = "updatingResource"
 
 
 def get_spark(
@@ -187,7 +205,9 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     if not flags:
-        return builder.getOrCreate()
+        spark = builder.getOrCreate()
+        _drop_property_sources(spark)
+        return spark
     saved = os.environ.get("SPARK_CONF_DIR")
     os.environ["SPARK_CONF_DIR"] = str(CDS_DIR / "conf")
     try:
@@ -204,7 +224,26 @@ def get_spark(
     if dump is not None:
         # our own reference: callers may drop SparkContext._gateway
         _dumps.append((SparkContext._gateway.proc, dump))
+    _drop_property_sources(spark)
     return spark
+
+
+def _drop_property_sources(spark: SparkSession) -> None:
+    """Empty the context Hadoop conf's per-key source records (module
+    docstring); keep them when the field cannot be found or set."""
+    jvm = spark._jvm
+    hc = spark._jsc.hadoopConfiguration()
+    try:
+        field = jvm.java.lang.Class.forName("org.apache.hadoop.conf.Configuration").getDeclaredField(_SOURCES_FIELD)
+        # registers the HDFS default resources now, not at a later
+        # filesystem lookup that would reload every conf
+        jvm.org.apache.hadoop.fs.FileSystem.getFileSystemClass("file", hc)
+        hc.size()  # loads the properties, which records their sources
+        field.setAccessible(True)
+        # one call; py4j's JavaMap.clear() pops each key in a round trip
+        field.set(hc, jvm.java.util.concurrent.ConcurrentHashMap())
+    except Py4JError:
+        pass
 
 
 def _java_home() -> Path | None:

@@ -140,8 +140,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # unix_micros(cast(... as timestamp)) and ts->timestamp_ntz conversion
     # then shifts by the zone offset while the DuckDB oracle stays
     # timezone-naive (measured: data_profile/table_checksums/customer_rfm
-    # all fail parity under a non-UTC session).  Runtime-settable conf;
-    # idempotent for sessions our factory built.  DOCUMENTED SIDE EFFECT:
+    # all fail parity under a non-UTC session).  Runtime-settable conf,
+    # set only when the session does not read UTC already (sessions our
+    # factory built do).  DOCUMENTED SIDE EFFECT:
     # the pin is unconditional (parity is the contract of every query in
     # this package), and overriding any non-UTC EFFECTIVE session value
     # warns once per application so the caller learns their timestamp
@@ -151,9 +152,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # for implicit defaults too — deliberately: the semantics change
     # either way, and the runtime conf API cannot distinguish the two.
     current = spark.conf.get("spark.sql.session.timeZone", None)
-    if current is not None and current != "UTC":
+    if current != "UTC":
         key = spark.sparkContext.applicationId
-        if key not in _TZ_WARNED:
+        if current is not None and key not in _TZ_WARNED:
             import warnings
 
             warnings.warn(
@@ -165,14 +166,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 stacklevel=2,
             )
             _TZ_WARNED.add(key)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         # Set here, not only in our session factory: the driver harness
         # builds its own bare SparkSession, and without this the scan
         # throws PARQUET_TYPE_ILLEGAL (runtime-settable SQL conf).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    # load(str) passes the one path as is; parquet(path) builds a Java
+    # list and seq for it, four more py4j round trips
+    df = spark.read.schema(parquet_schema(spark, path)).format("parquet").load(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F
 

@@ -102,3 +102,24 @@ def test_memoized_self_join_matches_inferred(spark, sf_dir, monkeypatch):
     with _inferring(monkeypatch):
         inferred = pairs()
     assert memo == inferred and len(memo) > 0
+
+
+def test_warm_load_skips_the_id_lookup_timezone_set_and_path_seq(spark, sf_dir, monkeypatch):
+    """On a UTC session whose package zip is attached, a memoized load sends
+    no applicationId lookup, no timezone set and no Java list or seq."""
+    load_table(spark, sf_dir, "orders")
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent: list[str] = []
+
+    def recording(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", recording)
+    load_table(spark, sf_dir, "orders")
+    monkeypatch.undo()
+    calls = [c.split("\n")[2] for c in sent if c.startswith("c\n")]
+    assert "load" in calls
+    assert not {"applicationId", "set", "toSeq"} & set(calls), calls
+    assert not [c for c in sent if "java.util.ArrayList" in c]

@@ -722,9 +722,12 @@ def test_tpch_rebuild_starts_no_job(spark, sf_dir):
 
 
 # py4j commands the main thread may send to rebuild the six tpch plans.
-# They send about 800 on a get_spark session, and about 2,000 when each
-# Column call captures its Python call site (dataFrameDebugging enabled).
-TPCH_REBUILD_PY4J_CEILING = 1100
+# They send about 710 on a get_spark session: 12 for each of the 15
+# load_table calls.  Each Column call capturing its Python call site
+# (dataFrameDebugging enabled) brings that to about 2,000, and each
+# load_table looking up the applicationId, setting a UTC timezone again
+# and passing its path as a Java seq to about 810.
+TPCH_REBUILD_PY4J_CEILING = 750
 
 
 def test_tpch_rebuild_py4j_round_trip_budget(spark, sf_dir, monkeypatch):
